@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lifecycle registry for the DataFrames graft persists INTERNALLY
   * (rank/zip partition-offset inputs, dedup shingle/band tables, …).
@@ -43,10 +43,14 @@ object Intermediates {
     // — holding their state maps on heap and a slot in the maintenance
     // scan — although the temp checkpoint is never revisited. A session
     // that has run many bounded streams would otherwise accumulate
-    // gigabytes of dead join/dedup state. Unload is cheap and lazy
-    // (providers re-open from their checkpoint on demand), so this is
-    // safe even if a live query were running.
-    org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess
-      .unloadAllProviders()
+    // gigabytes of dead join/dedup state. The unload is JVM-wide and
+    // would also drop a LIVE query's providers and stop the maintenance
+    // task under it, so it runs only while the current session has no
+    // active streaming query.
+    val session =
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    if (session.forall(_.streams.active.isEmpty))
+      org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess
+        .unloadAllProviders()
   }
 }

@@ -1762,8 +1762,15 @@ class PigCompiler(spark: SparkSession) {
       case "PigStorage" | "PigStream" =>
         // quote disabled: PigStorage is a PLAIN split — '"Ling"' keeps
         // its quotes (the csv default would strip them)
-        spark.read.option("delimiter", args.headOption.getOrElse("\t"))
-          .option("quote", "").option("header", "false").csv(path)
+        val csv = spark.read
+          .option("delimiter", args.headOption.getOrElse("\t"))
+          .option("quote", "").option("header", "false")
+        // a declared AS clause binds positionally, so an all-string schema
+        // of its names replaces the reader's first-line inference job;
+        // PERMISSIVE mode then pads each short row with nulls and drops a
+        // long row's extra tokens — PigStorage's per-line semantics
+        schema.fold(csv)(fs => csv.schema(StructType(
+          fs.map(f => StructField(f.name, StringType))))).csv(path)
       case "TextLoader" => spark.read.text(path)
       case "JsonStorage" => spark.read.json(path)
       case "BinStorage" | "ParquetStorage" => spark.read.parquet(path)

@@ -58,7 +58,7 @@ object PipelineQueries {
     * full read-back parallelism at sf0.1 and ~1 GB segments at 100 TB
     * (guide §2: derive partitioning from input size, not a constant). */
   private def warcSegmentBytes(s: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
+    val p = new org.apache.hadoop.fs.Path(Tables.path(dir, "documents"))
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val sz = fs.getContentSummary(p).getLength
     math.min(1L << 30,

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import graft.core.Tables
 import graft.streaming.Streams
 
 /** Streaming coverage AS oracled queries (SURVEY.md §2 rows 42/43/47/47b).
@@ -20,10 +20,10 @@ import graft.streaming.Streams
   */
 object StreamQueries {
 
-  /** File-stream over the events table (one micro-batched file source;
-    * same nanos→micros normalization as `Tables`). */
+  /** File-stream over the events table, schema from the `Tables` cache
+    * and normalized like a `Tables` load. */
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    val src = s"$dir/events.parquet"
+    val src = Tables.path(dir, "events")
     // the file-stream source monitors a DIRECTORY; the testdata tables
     // are single parquet files — stage a symlink dir (no data copy)
     val path =
@@ -34,18 +34,8 @@ object StreamQueries {
           d.resolve("part-0.parquet"), java.nio.file.Paths.get(src))
         d.toString
       }
-    val schema = s.read.parquet(src).schema
-    val raw = Streams.fileStream(s, path, schema)
-    schema("ts").dataType match {
-      // nanos-as-long testdata encoding (same normalization as Tables)
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      // timestamp[us] isAdjustedToUTC=false → TIMESTAMP_NTZ, which
-      // watermarks/unix_micros reject; UTC session makes the cast exact
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+    Tables.normalize(
+      Streams.fileStream(s, path, Tables.schema(s, dir, "events")))
   }
 
   /** Run a streaming frame to completion (AvailableNow) into a memory
@@ -241,7 +231,7 @@ object StreamQueries {
     "q_stream_warc" -> ((s, dir) => {
       val out = java.nio.file.Files
         .createTempDirectory("graft_swarc").toString
-      graft.sources.Warc.write(s.read.parquet(s"$dir/documents.parquet"),
+      graft.sources.Warc.write(Tables(s, dir, "documents"),
         out, uri = concat(lit("urn:graft:doc:"), col("doc_id")),
         payload = col("text"), gzip = true)
       val recs = graft.sources.Warc.readStream(s, out)
@@ -257,7 +247,7 @@ object StreamQueries {
       val out = java.nio.file.Files
         .createTempDirectory("graft_star").toString
       graft.sources.Archives.writeTar(
-        s.read.parquet(s"$dir/documents.parquet"), out,
+        Tables(s, dir, "documents"), out,
         entry = concat(lit("c/d-"), col("doc_id"), lit(".txt")),
         payload = col("text"))
       val recs = graft.sources.Archives.readTarStream(s, out)
@@ -273,7 +263,7 @@ object StreamQueries {
     //    entry (like q_profile_sketch); exact equality vs the batch
     //    sketch is spec'd differentially (StreamProfileSpec). --------------
     "q_stream_profile" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables(s, dir, "documents")
       val staged = java.nio.file.Files
         .createTempDirectory("graft_sprof_q").toString
       docs.repartition(1).write.mode("overwrite").parquet(staged)
@@ -290,7 +280,7 @@ object StreamQueries {
     //    Misra–Gries regime is spec'd differentially against the exact
     //    answer across micro-batch cuts (StreamHeavyHittersSpec). -----------
     "q_stream_heavy" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables(s, dir, "documents")
       val staged = java.nio.file.Files
         .createTempDirectory("graft_shh_src").toString
       docs.repartition(1).write.mode("overwrite").parquet(staged)
@@ -304,7 +294,7 @@ object StreamQueries {
     // the same audit FROM the dialect: HEAVY_HITTERS on a streaming
     //    relation routes to the streaming exact regime — same oracle
     "q_pig_stream_heavy" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables(s, dir, "documents")
       val staged = java.nio.file.Files
         .createTempDirectory("graft_pshh_src").toString
       docs.repartition(1).write.mode("overwrite").parquet(staged)
@@ -321,7 +311,7 @@ object StreamQueries {
     //    is a narrow per-row map, so it runs UNCHANGED on the ingest
     //    stream — same pattern constants, same oracle as q_contains_any
     "q_stream_match" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables(s, dir, "documents")
       val staged = java.nio.file.Files
         .createTempDirectory("graft_smatch_src").toString
       docs.repartition(1).write.mode("overwrite").parquet(staged)
@@ -353,7 +343,7 @@ object StreamQueries {
     //    aggregated on the sink output (one stateful op per stream) ----
     "q_stream_dedup_simhash" -> ((s, dir) => {
       val planted = PipelineQueries.plantedDocs(
-        s.read.parquet(s"$dir/documents.parquet"))
+        Tables(s, dir, "documents"))
       val staged = java.nio.file.Files
         .createTempDirectory("graft_sdh_src").toString
       planted.repartition(1).write.mode("overwrite").parquet(staged)
@@ -375,7 +365,7 @@ object StreamQueries {
     //    backfill (the whole point of hash-derived assignment). Same
     //    oracle as the batch q_split_hash. ----------------------------------
     "q_stream_split" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("lang"))
       val staged = java.nio.file.Files
         .createTempDirectory("graft_ssplit_src").toString
@@ -407,7 +397,7 @@ object StreamQueries {
     //    the batch q_decontaminate.
     "q_stream_decontaminate" -> ((s, dir) => {
       val docs = PipelineQueries.plantedDocs(
-        s.read.parquet(s"$dir/documents.parquet"))
+        Tables(s, dir, "documents"))
       val corpus = docs.where(col("doc_id") >= 1000000L)
       val bench = docs.where(col("doc_id") < 1000000L &&
         col("doc_id") % 20 === 3)

@@ -48,11 +48,11 @@ object AppendBench {
     ScaleBench.synthesize(spark, base, scaled, factor)
     val work = "target/append_bench"
 
-    val corpus = spark.read.parquet(s"$scaled/documents.parquet")
+    val corpus = graft.core.Tables(spark, scaled, "documents")
       .select(col("doc_id"), col("text"))
     val deltaSrc = sys.env.getOrElse("SPARK_GRAFT_APPEND_DELTA",
       "/root/testdata/sf0.01")
-    val delta = spark.read.parquet(s"$deltaSrc/documents.parquet")
+    val delta = graft.core.Tables(spark, deltaSrc, "documents")
       .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
     val union = corpus.unionByName(delta)
 

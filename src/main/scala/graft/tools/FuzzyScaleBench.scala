@@ -40,7 +40,7 @@ object FuzzyScaleBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val cust = spark.read.parquet(s"$base/customer.parquet")
+    val cust = graft.core.Tables(spark, base, "customer")
       .select(col("c_name")).cache()
     val n0 = cust.count()
 

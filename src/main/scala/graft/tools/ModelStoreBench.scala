@@ -39,10 +39,10 @@ object ModelStoreBench {
       new java.io.File(storeDir))
 
     import graft.core.ModelStore
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = graft.core.Tables(spark, sfDir, "embeddings")
     val corpus = emb.where(col("vec_id") >= 5)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.core.Tables(spark, sfDir, "documents")
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 
 /** Scale-stress harness: synthesizes a `factor`× copy of the sf0.1
   * documents/embeddings tables IN-ENGINE (salted ids, per-copy text /
@@ -129,7 +130,7 @@ object ScaleBench {
     // is an output-size artifact of the synthesizer, not an engine
     // property. The committed 10× ledger used the grouped scheme — its
     // ratios are therefore CONSERVATIVE.)
-    val docs = spark.read.parquet(s"$base/documents.parquet")
+    val docs = Tables(spark, base, "documents")
     docs.select(col("*"), copies)
       .select(
         (col("doc_id") * factor + col("copy")).as("doc_id"),
@@ -145,7 +146,7 @@ object ScaleBench {
               "t -> concat(t, '_c', copy))"))))
           .as("n_chars"))
       .repartition(32)
-      .write.mode("overwrite").parquet(s"$scaled/documents.parquet")
+      .write.mode("overwrite").parquet(Tables.path(scaled, "documents"))
 
     // embeddings: copy c flips the sign of component i iff bit (i mod 7)
     // of c is set — a per-copy ±1 Rademacher-style pattern. Distinct
@@ -160,7 +161,7 @@ object ScaleBench {
     // dispersal, not magnitude jitter, is what a scaled LSH corpus
     // needs.) The queries' own planted +1e-3 twins remain the only
     // near-dup structure.
-    val emb = spark.read.parquet(s"$base/embeddings.parquet")
+    val emb = Tables(spark, base, "embeddings")
     emb.select(col("*"), copies)
       .select(
         (col("vec_id") * factor + col("copy")).as("vec_id"),
@@ -171,7 +172,7 @@ object ScaleBench {
           .as("embedding"),
         col("label"))
       .repartition(32)
-      .write.mode("overwrite").parquet(s"$scaled/embeddings.parquet")
+      .write.mode("overwrite").parquet(Tables.path(scaled, "embeddings"))
 
     // everything else: symlink (events, lineitem, dims — unscaled; the
     // scaled queries only read documents/embeddings, the links keep the

@@ -111,12 +111,8 @@ object StreamScaleBench {
   /** Base events in the streaming [[Matcher.Event]] shape (tsMicros as a
     * plain long; the stream side re-attaches the TimestampType column). */
   private def loadBaseEvents(spark: SparkSession, base: String): DataFrame = {
-    val raw = spark.read.parquet(s"$base/events.parquet")
-    val tsMicros = raw.schema("ts").dataType match {
-      case LongType => expr("ts div 1000") // nanos-as-long testdata encoding
-      case _        => unix_micros(col("ts").cast(TimestampType))
-    }
-    raw.select(col("user_id").as("key"), tsMicros.as("tsMicros"),
+    graft.core.Tables(spark, base, "events").select(col("user_id").as("key"),
+      unix_micros(col("ts")).as("tsMicros"),
       col("event_type").as("etype"), col("event_id").as("id"), col("value"))
   }
 

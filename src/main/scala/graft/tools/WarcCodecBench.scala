@@ -30,7 +30,7 @@ object WarcCodecBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val docs = spark.read.parquet(s"$base/documents.parquet")
+    val docs = graft.core.Tables(spark, base, "documents")
       .select(concat(lit("https://example.org/doc/"), col("doc_id"))
         .as("uri"), col("text"))
       .persist()

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   */
 object WarcSeekBench {
   def main(args: Array[String]): Unit = {
-    val docs0 = args.headOption.getOrElse("target/scale100/documents.parquet")
+    val docs0 = args.headOption.getOrElse(
+      graft.core.Tables.path("target/scale100", "documents"))
     val out = args.lift(1).getOrElse("target/warc_seek_bench")
     val stride = args.lift(2).map(_.toInt).getOrElse(500)
     val ledger = args.lift(3).getOrElse("bench/bench_r08_warc_seek.json")

@@ -453,6 +453,23 @@ class PigLatinSpec extends SparkSpec {
         d.select((col("v") * 2).as("v")))))
     assert(c.relation("b").as[Int].collect().toSet == Set(2, 4))
   }
+
+  test("PigStorage AS binds each line positionally: short rows pad with " +
+      "nulls, extra tokens drop, and no inference job runs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pigpos")
+    java.nio.file.Files.writeString(dir.resolve("in.tsv"),
+      "1\ta\n2\tb\tc\n3\td\te\tf\n")
+    var a: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring {
+      a = PigScript.run(spark,
+        s"a = LOAD '$dir/in.tsv' AS (id:int, x:chararray, y:chararray);")
+        .relation("a")
+    }
+    assert(jobs == 0)
+    assert(a.columns.toSeq == Seq("id", "x", "y"))
+    assert(a.orderBy("id").as[(Int, String, Option[String])].collect().toSeq ==
+      Seq((1, "a", None), (2, "b", Some("c")), (3, "d", Some("e"))))
+  }
 }
 
 class RdfSpec extends SparkSpec {
