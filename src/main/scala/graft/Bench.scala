@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Per-round benchmark: runs every SparkEntry query at the driver-chosen
   * scale factor and prints one JSON line (also written to
@@ -12,45 +12,20 @@ import org.apache.spark.sql.SparkSession
   * startup is not attributed to the first query; queries run in sorted
   * name order for stable attribution. */
 object Bench {
-  // SPARK_GRAFT_BENCH_RUNS raises the per-query sample count (variance-
-  // pinning runs use 7); the driver never sets it, so round ledgers stay
-  // at the documented median-of-3
-  private val Runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
-    .map(_.toInt).getOrElse(3)
+  private val Runs = 3
+
+  /** Data directory of the bench and of [[graft.tools.Probe]]. */
+  def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // local-scheme checkpoints run through fork-free NIO I/O; remote
-      // schemes delegate to the stock Hadoop manager (see the class doc)
-      .config(graft.streaming.NioCheckpointFileManager.ConfKey,
-        graft.streaming.NioCheckpointFileManager.ConfValue)
-      // let AQE re-plan INSIDE cached plans: persisted intermediates
-      // otherwise pin tiny tables at the full shuffle-partition count,
-      // and every later pass re-schedules those near-empty tasks
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Bench.sfDir
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     // warm-up: session init, parquet footer reads, first codegen
     graft.core.Tables(spark, sfDir, "lineitem").limit(10).count()
-    // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts to named queries (local
-    // iteration aid; the driver never sets it so round benches stay full)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val all = SparkEntry.queries ++ SparkEntry.benchOnly
-    val selected = only match {
-      case Some(names) => all.filter(kv => names(kv._1))
-      case None => all
-    }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = all.toSeq.sortBy(_._1).map { case (name, fn) =>
       val times = (1 to Runs).flatMap { _ =>
         val t0 = System.nanoTime()
         // toRdd.count() evaluates the FULL projection: a DataFrame count()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.streaming.NioCheckpointFileManager.ConfKey,
-        graft.streaming.NioCheckpointFileManager.ConfValue)
-      // let AQE re-plan INSIDE cached plans: persisted intermediates
-      // otherwise pin tiny tables at the full shuffle-partition count,
-      // and every later pass re-schedules those near-empty tasks
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // data-dependent oracles (IVF centroids) are generated in-process
     graft.queries.OracleContext.session = Some((spark, sfDir))

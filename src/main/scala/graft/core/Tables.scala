@@ -59,10 +59,10 @@ object Tables {
     * physical encodings across rounds, and downstream operators expect a
     * plain TimestampType either way:
     *  - TIMESTAMP(NANOS) parquet → Spark reads raw nanos longs (the
-    *    nanosAsLong conf, set by every graft session builder) in `ts`;
+    *    nanosAsLong conf, set by [[GraftSession]]) in `ts`;
     *  - timestamp[us] with isAdjustedToUTC=false → Spark 4 infers
     *    TIMESTAMP_NTZ, which unix_micros/watermarks reject.
-    * Every graft session pins spark.sql.session.timeZone=UTC, so the
+    * [[GraftSession]] pins spark.sql.session.timeZone=UTC, so the
     * NTZ→TZ cast is value-preserving. Works on batch and streaming frames.
     */
   def normalize(df: DataFrame): DataFrame =
@@ -97,26 +97,5 @@ object Tables {
       b += ((f.getPath.toString, f.getLen, f.getModificationTime))
     }
     b.result().sorted
-  }
-}
-
-/** Session factory with scale-appropriate defaults (AQE on, shuffle
-  * partitions sized to cores — not the 200 default that would fragment
-  * local runs and under-provision a 1000-executor cluster, where the
-  * conf is expected to be overridden per deployment).
-  */
-object GraftSession {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 }

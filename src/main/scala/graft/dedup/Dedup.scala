@@ -518,7 +518,6 @@ object Dedup {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
       val neighborMin = edges.join(labels, edges("b") === labels("id"))
         .groupBy(edges("a").as("id")).agg(min(col("label")).as("nlabel"))
       val afterNb = labels.join(neighborMin, Seq("id"), "left")
@@ -578,10 +577,6 @@ object Dedup {
       labels = materialized.select("id", "label")
       converged = !anyChanged
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        // scalastyle:off println
-        println(s"[cc] iter=$iter changed=$anyChanged " +
-          f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     // exiting at maxIter with labels still moving means some component
     // carries MULTIPLE labels — silently returning would make downstream

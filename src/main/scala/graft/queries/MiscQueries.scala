@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.piglatin.PigScript
+import graft.piglatin.{PigletReference, PigScript}
 import graft.rdf.Rdf
 import graft.spatial.Spatial
 import graft.matrix.MatrixOps
@@ -65,12 +65,14 @@ object MiscQueries {
     * $inbase substituted) and return the STORE'd alias — the CORRECTNESS
     * promotion of the ItCompatSpec suite: the same scripts, hash-checked
     * against DuckDB reading the same reference input files. */
-  private val itBase = "/root/reference/src/it/resources"
+  // the oracle SQL only names the input files; running a script checks
+  // that the checkout is there
+  private val itBase = s"${PigletReference.Root}/src/it/resources"
   private val itStoreRe =
     """(?im)^\s*STORE\s+([A-Za-z_]\w*)\s+INTO\s+'[^']*'\s*;\s*""".r
   private def runItScript(s: SparkSession, script: String): DataFrame = {
-    val raw = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$itBase/$script"))
+    val raw = java.nio.file.Files.readString(java.nio.file.Paths.get(
+      PigletReference(s"src/it/resources/$script")))
     val alias = itStoreRe.findFirstMatchIn(raw).get.group(1)
     val noStore = itStoreRe.replaceAllIn(raw, "")
     PigScript.run(s, noStore, params = Map("inbase" -> itBase),

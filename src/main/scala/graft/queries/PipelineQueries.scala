@@ -1993,7 +1993,7 @@ object PipelineQueries {
     // input and LOAD — the median is therefore the warm cache path,
     // and any breakage in store round-trip or fingerprinting fails
     // the row). The absolute cold-vs-warm split lives in
-    // tools/ModelStoreBench's ledger.
+    // bench/bench_r07_modelstore.json.
     "q_ann_ivfpq_res_cached" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") < 5)

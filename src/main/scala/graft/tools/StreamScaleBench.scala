@@ -58,20 +58,11 @@ object StreamScaleBench {
       .split(",").map(_.trim.toInt).toSeq
     val ledger = args.lift(1).getOrElse("bench/bench_r08_scale_stream.json")
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_BASE", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // recentProgress is the authoritative per-batch state-peak source;
-      // the default 100-entry ring would silently drop the early batches
-      // of a 240-file run
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
+    // recentProgress is the authoritative per-batch state-peak source;
+    // the default 100-entry ring would silently drop the early batches
+    // of a 240-file run
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
 
     val ev0 = loadBaseEvents(spark, base)
     val spanMicros = {

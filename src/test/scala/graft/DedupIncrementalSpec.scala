@@ -33,6 +33,24 @@ class DedupIncrementalSpec extends SparkSpec {
     assert(incr == full)
   }
 
+  test("exact: appending to an index read back from parquet equals a " +
+      "rebuild over corpus ∪ delta (as multisets)") {
+    val all = planted.union(
+      planted.select(col("doc_id") + 5000000L, col("text"))
+        .toDF("doc_id", "text"))
+    val base = all.where(pmod(col("doc_id"), lit(3)) =!= 0)
+    val delta = all.where(pmod(col("doc_id"), lit(3)) === 0)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_exact_idx").toString
+    Incremental.exactIndex(base, "doc_id", "text")
+      .write.mode("overwrite").parquet(dir)
+    val incr = Incremental.exactAppend(spark.read.parquet(dir), delta,
+      "doc_id", "text")
+    val full = Incremental.exactIndex(all, "doc_id", "text")
+    assert(full.exceptAll(incr).count() == 0)
+    assert(incr.exceptAll(full).count() == 0)
+  }
+
   test("minhash: base pairs + append pairs equal full-corpus pairs") {
     val all = planted
     val base = all.where(pmod(col("doc_id"), lit(3)) =!= 0)

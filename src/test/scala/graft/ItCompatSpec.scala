@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
-import graft.piglatin.PigScript
+import graft.piglatin.{PigletReference, PigScript}
 
 /** End-to-end execution of the reference's OWN integration suite
   * (reference: src/it/scala/dbis/test/spark/SparkCompileIt.scala): each
@@ -16,7 +16,7 @@ import graft.piglatin.PigScript
   */
 class ItCompatSpec extends SparkSpec {
 
-  private val base = "/root/reference/src/it/resources"
+  private def base = PigletReference("src/it/resources")
 
   /** piglet PigStorage rendering of a Spark value. */
   private def render(v: Any): String = v match {

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.r.MiniR
 import graft.ml.Dbscan
+import graft.piglatin.PigletReference
 
 /** The builtin RSCRIPT engine: an in-JVM evaluator for the R-matrix
   * subset the reference's scripts use, with fpc::dbscan backed by a real
@@ -64,11 +65,11 @@ class MiniRSpec extends AnyFunSuite {
 
   test("Dbscan reproduces the reference truth file exactly (fpc semantics)") {
     val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
-      "/root/reference/src/it/resources/input/cluster-data.csv"))
+      PigletReference("src/it/resources/input/cluster-data.csv")))
     val pts = lines.toArray(Array.empty[String]).filter(_.nonEmpty)
       .map(_.split(",").map(_.toDouble))
     val truth = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
-      "/root/reference/src/it/resources/truth/cluster.data"))
+      PigletReference("src/it/resources/truth/cluster.data")))
       .toArray(Array.empty[String]).filter(_.nonEmpty)
       .map(_.split(",")(2).toDouble.toInt - 1) // truth stores cluster+1
     assert(Dbscan.fit(pts, eps = 0.3, minPts = 5).toSeq == truth.toSeq)
@@ -83,7 +84,7 @@ class DbscanDistributedSpec extends SparkSpec {
 
   test("distributed DBSCAN matches local clustering on the reference data") {
     val pts = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
-      "/root/reference/src/it/resources/input/cluster-data.csv"))
+      PigletReference("src/it/resources/input/cluster-data.csv")))
       .toArray(Array.empty[String]).filter(_.nonEmpty)
       .map(_.split(",").map(_.toDouble))
     val local = graft.ml.Dbscan.fit(pts, eps = 0.3, minPts = 5)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.piglatin.{EmbeddedCode, PigParser, PigScript}
+import graft.piglatin.{EmbeddedCode, PigletReference, PigParser, PigScript}
 
 /** Front-end compatibility: every Pig script in the reference's
   * integration suite must parse (after the same pre-passes a real run
@@ -12,7 +12,7 @@ import graft.piglatin.{EmbeddedCode, PigParser, PigScript}
 class ParseCompatSpec extends AnyFunSuite {
 
   test("all reference integration scripts parse") {
-    val dir = Paths.get("/root/reference/src/it/resources")
+    val dir = Paths.get(PigletReference.Root, "src/it/resources")
     assume(Files.isDirectory(dir))
     val pigs = Files.list(dir).iterator().asScala
       .filter(_.toString.endsWith(".pig")).toSeq.sortBy(_.toString)
@@ -20,7 +20,8 @@ class ParseCompatSpec extends AnyFunSuite {
       val sub = Files.readString(p)
         .replaceAll("\\$[A-Za-z_][A-Za-z0-9_]*", "X")
       try {
-        val imported = PigScript.expandImports(sub, Some("/root/reference"))
+        val imported =
+          PigScript.expandImports(sub, Some(PigletReference.Root))
         val expanded = PigScript.expandMacros(imported)
         val (cleaned, _) = EmbeddedCode.blockStrip(expanded)
         PigParser.parseScript(cleaned)
@@ -35,8 +36,8 @@ class ParseCompatSpec extends AnyFunSuite {
 
   test("every keyword in the reference grammar is handled by graft's parser") {
     import java.nio.file.{Files, Paths}
-    val refSrc = Files.readString(Paths.get(
-      "/root/reference/src/main/scala/dbis/piglet/parser/PigParser.scala"))
+    val refSrc = Files.readString(Paths.get(PigletReference(
+      "src/main/scala/dbis/piglet/parser/PigParser.scala")))
     // the reference binds each keyword as `xKeyword = "word".ignoreCase`
     val refKw = """[A-Za-z]+Keyword\s*:?[^=\n]*=\s*"([a-z_ ]+)"""".r
       .findAllMatchIn(refSrc).map(_.group(1)).toSet

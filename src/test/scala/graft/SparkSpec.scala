@@ -54,22 +54,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.streaming.NioCheckpointFileManager.ConfKey,
-        graft.streaming.NioCheckpointFileManager.ConfValue)
-      // let AQE re-plan INSIDE cached plans: persisted intermediates
-      // otherwise pin tiny tables at the full shuffle-partition count,
-      // and every later pass re-schedules those near-empty tasks
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
