@@ -1,17 +1,19 @@
 package graft.cep
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.collection.mutable.{ArrayBuffer, Queue}
+import scala.collection.mutable.{ArrayBuffer, ListBuffer, Queue}
 
 /** Complex-event processing: MATCH_EVENT SEQ/AND/OR/NEG + WITHIN
   * (reference: src/main/scala/dbis/piglet/op/Matcher.scala, Language.md
-  * §CEP), re-expressed as a distributed secondary-sort scan.
+  * §CEP): one [[Matcher.Automaton]], driven by a batch secondary-sort
+  * scan ([[Matcher.matchSeq]]) and by the stateful stream scans in
+  * graft.streaming.Streams.
   *
-  * Scale shape: `repartition(key)` + `sortWithinPartitions(key, ts, id)`
-  * + one streaming `mapPartitions` pass — the classic secondary-sort
-  * pattern. No per-group materialization (a key's events never collect
+  * Batch scale shape: `repartition(key)` +
+  * `sortWithinPartitions(key, ts, id)` + one streaming `mapPartitions`
+  * pass — the classic secondary-sort pattern. No per-group materialization (a key's events never collect
   * into one array), no driver involvement; open partial matches are
   * bounded by the WITHIN window so state stays O(active window), exactly
   * what a 100 TB event log needs.
@@ -52,7 +54,28 @@ object Matcher {
     Set("skip_till_next_match", "skip_till_any_match", "first_match",
       "contiguity_match")
 
-  /** Match a SEQ pattern per key over an event DataFrame.
+  /** The pattern/mode checks every engine runs before scanning. */
+  def validate(pattern: Seq[Step], mode: String): Unit = {
+    require(pattern.nonEmpty && pattern.head.isInstanceOf[Pos],
+      "pattern must start with a Pos step")
+    // a trailing NEG would need "absence until the WITHIN horizon expires"
+    // semantics (delayed emission); the scan completes on the last Pos and
+    // would silently IGNORE the negation — reject the shape instead
+    require(pattern.last.isInstanceOf[Pos],
+      "pattern must end with a Pos step: a trailing Neg (absence after " +
+        "the final match) is not supported — bound it with a closing " +
+        "Pos step or post-filter the matches")
+    require(supportedModes.contains(mode),
+      s"unsupported MATCH_EVENT mode '$mode' — supported: " +
+        supportedModes.toSeq.sorted.mkString(", ") +
+        " (the reference engine also rejects recent_match/cognitive_match)")
+    require(mode != "contiguity_match" || pattern.forall(_.isInstanceOf[Pos]),
+      "contiguity_match rejects Neg steps: strict contiguity already " +
+        "kills a partial on ANY non-matching event, so a negation " +
+        "window can never fire")
+  }
+
+  /** The normalized event view every engine scans, batch or streaming.
     *
     * Time column contract: TimestampType converts to epoch micros;
     * NUMERIC columns are read as micros directly (the Pig dialect, whose
@@ -60,6 +83,42 @@ object Matcher {
     * PigCompiler's MATCH_EVENT). Rows with a null key/time/id/value are
     * dropped (they cannot participate in a keyed time-ordered scan and
     * would crash the primitive encoder).
+    */
+  def events(df: DataFrame, keyCol: String, tsCol: String, typeCol: String,
+             idCol: String, valueCol: String): Dataset[Event] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    // numeric time columns are ALREADY micros (casting a long through
+    // TimestampType would read it as seconds — a 1e6 scale error or an
+    // ANSI overflow); only real timestamps convert (same dtype branch as
+    // TemporalJoins)
+    val tsMicros = df.schema(tsCol).dataType match {
+      case TimestampType => unix_micros(col(tsCol))
+      case _ => col(tsCol).cast(LongType)
+    }
+    df.select(
+        col(keyCol).cast(LongType).as("key"),
+        tsMicros.as("tsMicros"),
+        col(typeCol).cast(StringType).as("etype"),
+        col(idCol).cast(LongType).as("id"),
+        col(valueCol).cast(DoubleType).as("value"))
+      .where(col("key").isNotNull && col("tsMicros").isNotNull &&
+        col("id").isNotNull && col("value").isNotNull)
+      .as[Event]
+  }
+
+  /** An open partial match: the matched ids REVERSED, the index of the
+    * pattern step it waits on, its start and its last matched micros.
+    * The streaming state rows store partials in exactly this shape. */
+  type Partial = (List[Long], Int, Long, Long)
+
+  /** The CEP automaton, one per (pattern, WITHIN, mode): [[step]] feeds
+    * one event of a key to that key's open partials. Batch [[matchSeq]]
+    * folds it over each key's run of the secondary-sorted partition; the
+    * streaming scans (graft.streaming.Streams.streamMatchSteps and
+    * streamMatchStepsReordered) fold it over each key's micro-batch via
+    * [[scan]], carrying the partials in state. Every engine must feed a
+    * key's events in (ts, id) order.
     *
     * Semantics: skip-till-next-match — every event satisfying step 0 opens
     * a partial match; each partial independently takes the earliest event
@@ -91,138 +150,125 @@ object Matcher {
     * steps are rejected in this mode: under strict contiguity a
     * negation-window is unexpressible — ANY intervening event kills the
     * partial already, so a Neg step could never fire.
+    *
+    * `skip_till_any_match`: a partial BRANCHES on every matching event
+    * (the advanced copy is added and the original stays open until its
+    * WITHIN horizon), so every combination is emitted.
+    */
+  final class Automaton(pattern: Seq[Step], withinMicros: Long, mode: String)
+      extends Serializable {
+    validate(pattern, mode)
+    private val steps = pattern.toIndexedSeq
+    private val anyMatch = mode == "skip_till_any_match"
+    private val firstMatch = mode == "first_match"
+    private val contiguity = mode == "contiguity_match"
+    // nextPos(i): the first Pos step at or after i (steps.length: none
+    // left, i.e. the partial is complete)
+    private val nextPos: Array[Int] = {
+      val a = new Array[Int](steps.length + 1)
+      a(steps.length) = steps.length
+      for (i <- steps.indices.reverse)
+        a(i) = if (steps(i).isInstanceOf[Pos]) i else a(i + 1)
+      a
+    }
+    private def accepts(i: Int, e: Event): Boolean =
+      steps(i).asInstanceOf[Pos].pred(e)
+
+    // NEG guards preceding the partial's next Pos step. Only events
+    // STRICTLY AFTER the last matched step can kill — the SQL-oracle form
+    // is NOT EXISTS(n.ts > a.ts AND n.ts < b.ts), so a negated event
+    // sharing the previous step's timestamp is not "between". (An inverse
+    // tie at the COMPLETING step's timestamp is a known corner: the scan
+    // cannot see the future.) Under the (ts, id) feed order every negator
+    // between two Pos steps is seen before the completing event, so
+    // interior NEG needs no delayed emission.
+    private def negated(next: Int, last: Long, e: Event): Boolean = {
+      var i = next - 1
+      var hit = false
+      while (!hit && i >= 0 && !steps(i).isInstanceOf[Pos]) {
+        hit = e.tsMicros > last && steps(i).asInstanceOf[Neg].pred(e)
+        i -= 1
+      }
+      hit
+    }
+
+    /** Feed `e` to its key's `open` partials: emit every completed match
+      * and return the partials still open after it. */
+    def step(open: List[Partial], e: Event,
+             emit: MatchResult => Unit): List[Partial] = {
+      // expire partials whose WITHIN window has closed, and NEG kills
+      val live = open.filter { case (_, next, start, last) =>
+        e.tsMicros - start <= withinMicros && !negated(next, last, e) }
+      // first_match entry check: the slot is "free" only if no partial
+      // survived expiry/NEG above — an event completing the live partial
+      // below must NOT re-open on itself (reference FirstMatch.runEngine
+      // tests pool emptiness before processing)
+      val slotFree = live.isEmpty
+      val kept = ListBuffer.empty[Partial]
+      live.foreach { case p @ (ids, next, start, last) =>
+        if (e.tsMicros > last && accepts(next, e)) {
+          val matched = e.id :: ids
+          val after = nextPos(next + 1)
+          if (after == steps.length)
+            emit(MatchResult(e.key, matched.reverse, start, e.tsMicros))
+          else kept += ((matched, after, start, e.tsMicros))
+          // any_match forks: the original stays open
+          if (anyMatch) kept += p
+        } else if (!contiguity || e.tsMicros <= last) {
+          // non-advancing partials survive, except under strict
+          // contiguity when the event was VISIBLE to them
+          kept += p
+        }
+      }
+      // step 0 opens a new partial (overlapping starts allowed;
+      // first_match: only into a free slot)
+      if ((!firstMatch || slotFree) && accepts(0, e)) {
+        val after = nextPos(1)
+        if (after == steps.length)
+          emit(MatchResult(e.key, List(e.id), e.tsMicros, e.tsMicros))
+        else kept.prepend((List(e.id), after, e.tsMicros, e.tsMicros))
+      }
+      kept.toList
+    }
+
+    /** [[step]] over one key's `events`, sorted here by (ts, id), starting
+      * from `open`: the matches and the partials left open. */
+    def scan(events: Seq[Event],
+             open: List[Partial]): (Seq[MatchResult], List[Partial]) = {
+      val out = ArrayBuffer.empty[MatchResult]
+      val left = events.sortBy(e => (e.tsMicros, e.id))
+        .foldLeft(open)((o, e) => step(o, e, out += _))
+      (out.toSeq, left)
+    }
+  }
+
+  /** Match a SEQ pattern per key over an event DataFrame, read through
+    * [[events]]: the [[Automaton]] folded over each key's time-ordered run
+    * of the secondary-sorted partition, one pass, no per-key collection.
     */
   def matchSeq(events: DataFrame, keyCol: String, tsCol: String,
                typeCol: String, idCol: String, valueCol: String,
                pattern: Seq[Step], withinMicros: Long,
                mode: String = "skip_till_next_match"): DataFrame = {
-    require(pattern.nonEmpty && pattern.head.isInstanceOf[Pos],
-      "pattern must start with a Pos step")
-    // a trailing NEG would need "absence until the WITHIN horizon expires"
-    // semantics (delayed emission); the scan completes on the last Pos and
-    // would silently IGNORE the negation — reject the shape instead
-    require(pattern.last.isInstanceOf[Pos],
-      "pattern must end with a Pos step: a trailing Neg (absence after " +
-        "the final match) is not supported — bound it with a closing " +
-        "Pos step or post-filter the matches")
-    require(supportedModes.contains(mode),
-      s"unsupported MATCH_EVENT mode '$mode' — supported: " +
-        supportedModes.toSeq.sorted.mkString(", ") +
-        " (the reference engine also rejects recent_match/cognitive_match)")
-    // skip_till_any_match: a partial BRANCHES on every matching event
-    // (all combinations emitted) instead of consuming only the earliest
-    val anyMatch = mode == "skip_till_any_match"
-    val firstMatch = mode == "first_match"
-    val contiguity = mode == "contiguity_match"
-    require(!contiguity || pattern.forall(_.isInstanceOf[Pos]),
-      "contiguity_match rejects Neg steps: strict contiguity already " +
-        "kills a partial on ANY non-matching event, so a negation " +
-        "window can never fire")
+    val automaton = new Automaton(pattern, withinMicros, mode)
     val spark = events.sparkSession
     import spark.implicits._
-
-    val nPos = pattern.count(_.isInstanceOf[Pos])
-    def nextPosIdx(from: Int): Int = {
-      var i = from
-      while (i < pattern.length && !pattern(i).isInstanceOf[Pos]) i += 1
-      i
-    }
-
-    // numeric time columns are ALREADY micros (casting a long through
-    // TimestampType would read it as seconds — a 1e6 scale error or an
-    // ANSI overflow); only real timestamps convert (same dtype branch as
-    // TemporalJoins)
-    val tsMicros = events.schema(tsCol).dataType match {
-      case TimestampType => unix_micros(col(tsCol))
-      case _ => col(tsCol).cast(LongType)
-    }
-    val prepared = events.select(
-        col(keyCol).cast(LongType).as("key"),
-        tsMicros.as("tsMicros"),
-        col(typeCol).cast(StringType).as("etype"),
-        col(idCol).cast(LongType).as("id"),
-        col(valueCol).cast(DoubleType).as("value"))
-      // rows with a null key/time/id cannot participate in a keyed,
-      // time-ordered scan, and a null value would crash the primitive
-      // Event encoder — drop them instead of dying on one dirty row
-      .where(col("key").isNotNull && col("tsMicros").isNotNull &&
-        col("id").isNotNull && col("value").isNotNull)
-      .as[Event]
+    val sorted = Matcher.events(events, keyCol, tsCol, typeCol, idCol, valueCol)
       .repartition(col("key"))
       .sortWithinPartitions(col("key"), col("tsMicros"), col("id"))
 
-    val results = prepared.mapPartitions { it =>
+    val results = sorted.mapPartitions { it =>
       new Iterator[MatchResult] {
-        final class Partial(var next: Int, val ids: ArrayBuffer[Long],
-                            val start: Long, var last: Long)
         private var curKey = Long.MinValue
-        private val open = ArrayBuffer.empty[Partial]
+        private var open = List.empty[Partial]
         private val out = Queue.empty[MatchResult]
 
-        private def feed(e: Event): Unit = {
-          if (e.key != curKey) { curKey = e.key; open.clear() }
-          // expire partials whose WITHIN window has closed
-          open.filterInPlace(p => e.tsMicros - p.start <= withinMicros)
-          // NEG guards preceding each partial's next Pos step. Only
-          // events STRICTLY AFTER the last matched step can kill — the
-          // SQL-oracle form is NOT EXISTS(n.ts > a.ts AND n.ts < b.ts),
-          // so a negated event sharing the previous step's timestamp is
-          // not "between". (An inverse tie at the COMPLETING step's
-          // timestamp is a known corner: the scan cannot see the future.)
-          open.filterInPlace { p =>
-            var i = p.next - 1
-            var alive = true
-            while (i >= 0 && pattern(i).isInstanceOf[Neg]) {
-              if (e.tsMicros > p.last && pattern(i).asInstanceOf[Neg].pred(e))
-                alive = false
-              i -= 1
-            }
-            alive
-          }
-          // first_match entry check: the slot is "free" only if no partial
-          // survived expiry/NEG above — an event completing the live
-          // partial below must NOT re-open on itself (reference
-          // FirstMatch.runEngine tests pool emptiness before processing)
-          val slotFree = open.isEmpty
-          // next_match: every open partial advances on its earliest
-          // matching event; any_match: it forks instead, staying open
-          val forked = ArrayBuffer.empty[Partial]
-          open.foreach { p =>
-            if (pattern(p.next).asInstanceOf[Pos].pred(e) && e.tsMicros > p.last) {
-              if (anyMatch) {
-                val ids = p.ids.clone(); ids += e.id
-                if (ids.length == nPos)
-                  out.enqueue(MatchResult(e.key, ids.toSeq, p.start, e.tsMicros))
-                else forked += new Partial(nextPosIdx(p.next + 1), ids,
-                  p.start, e.tsMicros)
-              } else {
-                p.ids += e.id
-                p.last = e.tsMicros
-                p.next = nextPosIdx(p.next + 1)
-                if (p.ids.length == nPos)
-                  out.enqueue(MatchResult(e.key, p.ids.toSeq, p.start, e.tsMicros))
-              }
-            }
-          }
-          open.filterInPlace(p => p.ids.length < nPos)
-          // contiguity: any partial that SAW this event (strictly later
-          // than its last match) and did not advance on it is dead — an
-          // advanced partial has last == e.tsMicros and survives
-          if (contiguity) open.filterInPlace(p => e.tsMicros <= p.last)
-          open ++= forked
-          // step 0 opens a new partial (overlapping starts allowed;
-          // first_match: only into a free slot)
-          if ((!firstMatch || slotFree) && pattern.head.asInstanceOf[Pos].pred(e)) {
-            if (nPos == 1)
-              out.enqueue(MatchResult(e.key, Seq(e.id), e.tsMicros, e.tsMicros))
-            else
-              open += new Partial(nextPosIdx(1), ArrayBuffer(e.id),
-                e.tsMicros, e.tsMicros)
-          }
-        }
-
         def hasNext: Boolean = {
-          while (out.isEmpty && it.hasNext) feed(it.next())
+          while (out.isEmpty && it.hasNext) {
+            val e = it.next()
+            if (e.key != curKey) { curKey = e.key; open = Nil }
+            open = automaton.step(open, e, out.enqueue(_))
+          }
           out.nonEmpty
         }
         def next(): MatchResult = out.dequeue()

@@ -899,55 +899,39 @@ class PigCompiler(spark: SparkSession) {
           m.select(col("key"), col("ids"), col("startMicros"), col("endMicros"))
         else m.select(col("ids"), col("startMicros"), col("endMicros"))
       val withinMicros = withinSec * 1000000L
-      val out: () => DataFrame =
-        if (df.isStreaming) {
-          // STREAMING input: route to the stateful streaming scan — the
-          // reference scripted CEP over socket streams (ceplib); batch
-          // matchSeq cannot execute on an unbounded relation. REORDER BY
-          // 'delay' opts into the watermark reorder buffer for
-          // out-of-order sources; without it the per-key in-order
-          // arrival contract of streamMatchSteps applies.
-          import spark.implicits._
-          val tsMicros =
-            if (df.schema(tsCol).dataType == TimestampType)
-              unix_micros(col(tsCol))
-            else (col(tsCol).cast(DoubleType) * 1e6).cast(LongType)
-          val evs = prepared0.select(
-              col("__key").as("key"), tsMicros.as("tsMicros"),
-              col("__etype").as("etype"), col("__id").as("id"),
-              col("__val").as("value"))
-            .where(col("key").isNotNull && col("tsMicros").isNotNull &&
-              col("id").isNotNull)
-            .as[Matcher.Event]
-          def runStream(p: Pat): DataFrame = {
-            val st = steps(p)
-            reorder match {
-              case Some(delay) => graft.streaming.Streams
-                .streamMatchStepsReordered(evs, st, withinMicros, delay, mode)
-                .toDF()
-              case None => graft.streaming.Streams
-                .streamMatchSteps(evs, st, withinMicros, mode = mode).toDF()
-            }
-          }
-          () => shape(pattern match {
-            case PAnd(items) => items.permutations
-              .map(perm => runStream(PSeq(perm))).reduce(_.unionByName(_))
-            case p => runStream(p)
-          })
-        } else {
-          require(reorder.isEmpty,
-            "MATCH_EVENT REORDER BY applies to streaming inputs only — " +
-              "a batch relation is already time-sortable")
-          def run(p: Pat) = shape(Matcher.matchSeq(prepared, "__key", tsName,
-            "__etype", "__id", "__val", steps(p), withinMicros, mode))
-          val batched = pattern match {
-            // AND(A,B): both occur in either order within the window
-            case PAnd(items) => items.permutations
-              .map(perm => run(PSeq(perm))).reduce(_.unionByName(_))
-            case p => run(p)
-          }
-          () => batched
+      require(df.isStreaming || reorder.isEmpty,
+        "MATCH_EVENT REORDER BY applies to streaming inputs only — " +
+          "a batch relation is already time-sortable")
+      // BATCH input: the secondary-sort scan. STREAMING input: the
+      // stateful streaming scan — the reference scripted CEP over socket
+      // streams (ceplib); batch matchSeq cannot execute on an unbounded
+      // relation. REORDER BY 'delay' opts into the watermark reorder
+      // buffer for out-of-order sources; without it the per-key in-order
+      // arrival contract of streamMatchSteps applies.
+      def run(p: Pat): DataFrame =
+        if (!df.isStreaming) Matcher.matchSeq(prepared, "__key", tsName,
+          "__etype", "__id", "__val", steps(p), withinMicros, mode)
+        else {
+          val evs = Matcher.events(prepared, "__key", tsName, "__etype",
+            "__id", "__val")
+          val st = steps(p)
+          (reorder match {
+            case Some(delay) => graft.streaming.Streams
+              .streamMatchStepsReordered(evs, st, withinMicros, delay, mode)
+            case None => graft.streaming.Streams
+              .streamMatchSteps(evs, st, withinMicros, mode = mode)
+          }).toDF()
         }
+      def matched(): DataFrame = shape(pattern match {
+        // AND(A,B): both occur in either order within the window
+        case PAnd(items) => items.permutations
+          .map(perm => run(PSeq(perm))).reduce(_.unionByName(_))
+        case p => run(p)
+      })
+      // a batch plan is built once, here; a streaming plan on every use
+      val out: () => DataFrame =
+        if (df.isStreaming) () => matched()
+        else { val m = matched(); () => m }
       env(a) = Rel(out)
 
     // ---- WINDOW (reference: op/Window.scala) -------------------------------

@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import graft.cep.Matcher
+import graft.cep.Matcher.{Neg, Pos, typeIs}
 import graft.core.Tables
 import graft.streaming.Streams
 
@@ -38,6 +41,35 @@ object StreamQueries {
       Streams.fileStream(s, path, Tables.schema(s, dir, "events")))
   }
 
+  /** Bounded file-stream replay of a static frame: `df` is written as
+    * one parquet file into a fresh directory, which is then streamed
+    * back. The stream's schema is `df`'s made nullable — what Spark's
+    * parquet writer stores — so the replay runs no schema-inference job. */
+  private[graft] def replay(df: DataFrame): DataFrame = {
+    val staged = java.nio.file.Files
+      .createTempDirectory("graft_replay").toString
+    df.repartition(1).write.mode("overwrite").parquet(staged)
+    Streams.fileStream(df.sparkSession, staged,
+      nullable(df.schema).asInstanceOf[StructType])
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case st: StructType => StructType(st.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The events stream as the CEP scans' event view. */
+  private def cepEvents(s: SparkSession, dir: String) =
+    Matcher.events(eventStream(s, dir), "user_id", "ts", "event_type",
+      "event_id", "value")
+
+  private val signupPurchase = Seq(Pos(typeIs("signup")),
+    Pos(typeIs("purchase")))
+
   /** Run a streaming frame to completion (AvailableNow) into a memory
     * sink and return the static result table. */
   private def runBounded(df: DataFrame, name: String,
@@ -66,48 +98,29 @@ object StreamQueries {
     }),
     // -- #42 CEP on a stream: flatMapGroupsWithState signup→purchase --------
     "q_stream_cep" -> ((s, dir) => {
-      import s.implicits._
-      val evs = eventStream(s, dir).select(
-          col("user_id").as("key"),
-          unix_micros(col("ts")).as("tsMicros"),
-          col("event_type").as("etype"),
-          col("event_id").as("id"),
-          col("value"))
-        .as[graft.cep.Matcher.Event]
-      val m = Streams.streamMatchSeq(evs, "signup", "purchase",
+      val evs = cepEvents(s, dir)
+      val m = Streams.streamMatchSteps(evs, signupPurchase,
         withinMicros = 3600L * 1000000L)
       runBounded(m.toDF(), "q_stream_cep_sink", OutputMode.Append())
-        .select(col("key").as("user_id"), col("startId").as("start_id"),
-          col("endId").as("next_id"))
+        .select(col("key").as("user_id"),
+          element_at(col("ids"), 1).as("start_id"),
+          element_at(col("ids"), 2).as("next_id"))
     }),
     // -- #42 CEP any_match: completed starts stay live until WITHIN expiry --
     "q_stream_cep_any" -> ((s, dir) => {
-      import s.implicits._
-      val evs = eventStream(s, dir).select(
-          col("user_id").as("key"),
-          unix_micros(col("ts")).as("tsMicros"),
-          col("event_type").as("etype"),
-          col("event_id").as("id"),
-          col("value"))
-        .as[graft.cep.Matcher.Event]
-      val m = Streams.streamMatchSeq(evs, "signup", "purchase",
+      val evs = cepEvents(s, dir)
+      val m = Streams.streamMatchSteps(evs, signupPurchase,
         withinMicros = 3600L * 1000000L, mode = "skip_till_any_match")
       runBounded(m.toDF(), "q_stream_cep_any_sink", OutputMode.Append())
-        .select(col("key").as("user_id"), col("startId").as("start_id"),
-          col("endId").as("next_id"))
+        .select(col("key").as("user_id"),
+          element_at(col("ids"), 1).as("start_id"),
+          element_at(col("ids"), 2).as("next_id"))
     }),
     // -- #42 n-step CEP: 3-step SEQ via the general streaming scan ----------
     "q_stream_cep3" -> ((s, dir) => {
-      import s.implicits._
-      val evs = eventStream(s, dir).select(
-          col("user_id").as("key"),
-          unix_micros(col("ts")).as("tsMicros"),
-          col("event_type").as("etype"),
-          col("event_id").as("id"),
-          col("value"))
-        .as[graft.cep.Matcher.Event]
-      val m = Streams.streamMatchPattern(evs,
-        Seq("signup", "view", "purchase"),
+      val evs = cepEvents(s, dir)
+      val m = Streams.streamMatchSteps(evs,
+        Seq("signup", "view", "purchase").map(t => Pos(typeIs(t))),
         withinMicros = 1800L * 1000000L, mode = "skip_till_any_match")
       runBounded(m.toDF(), "q_stream_cep3_sink", OutputMode.Append())
         .select(col("key").as("user_id"),
@@ -120,18 +133,9 @@ object StreamQueries {
     //    feed (every negator is scanned before the completing event);
     //    same pattern and oracle as the batch q_cep_neg ------------------
     "q_stream_cep_neg" -> ((s, dir) => {
-      import s.implicits._
-      val evs = eventStream(s, dir).select(
-          col("user_id").as("key"),
-          unix_micros(col("ts")).as("tsMicros"),
-          col("event_type").as("etype"),
-          col("event_id").as("id"),
-          col("value"))
-        .as[graft.cep.Matcher.Event]
-      val m = Streams.streamMatchSteps(evs, Seq(
-          graft.cep.Matcher.Pos(graft.cep.Matcher.typeIs("signup")),
-          graft.cep.Matcher.Neg(graft.cep.Matcher.typeIs("error")),
-          graft.cep.Matcher.Pos(graft.cep.Matcher.typeIs("purchase"))),
+      val evs = cepEvents(s, dir)
+      val m = Streams.streamMatchSteps(evs, Seq(Pos(typeIs("signup")),
+          Neg(typeIs("error")), Pos(typeIs("purchase"))),
         withinMicros = 3600L * 1000000L)
       runBounded(m.toDF(), "q_stream_cep_neg_sink", OutputMode.Append())
         .select(col("key").as("user_id"),
@@ -143,17 +147,8 @@ object StreamQueries {
     //    matches emit only once the watermark releases the completing
     //    event, so the oracle bounds completions at max(ts) - delay ------
     "q_stream_cep_reorder" -> ((s, dir) => {
-      import s.implicits._
-      val evs = eventStream(s, dir).select(
-          col("user_id").as("key"),
-          unix_micros(col("ts")).as("tsMicros"),
-          col("event_type").as("etype"),
-          col("event_id").as("id"),
-          col("value"))
-        .as[graft.cep.Matcher.Event]
-      val m = Streams.streamMatchStepsReordered(evs, Seq(
-          graft.cep.Matcher.Pos(graft.cep.Matcher.typeIs("signup")),
-          graft.cep.Matcher.Pos(graft.cep.Matcher.typeIs("purchase"))),
+      val evs = cepEvents(s, dir)
+      val m = Streams.streamMatchStepsReordered(evs, signupPurchase,
         withinMicros = 3600L * 1000000L, watermarkDelay = "30 minutes")
       runBounded(m.toDF(), "q_stream_cep_reorder_sink", OutputMode.Append())
         .select(col("key").as("user_id"),
@@ -263,12 +258,7 @@ object StreamQueries {
     //    entry (like q_profile_sketch); exact equality vs the batch
     //    sketch is spec'd differentially (StreamProfileSpec). --------------
     "q_stream_profile" -> ((s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val staged = java.nio.file.Files
-        .createTempDirectory("graft_sprof_q").toString
-      docs.repartition(1).write.mode("overwrite").parquet(staged)
-      val schema = s.read.parquet(staged).schema
-      val stream = Streams.fileStream(s, staged, schema)
+      val stream = replay(Tables(s, dir, "documents"))
       val prof = graft.core.Profile.sketch(stream,
         Seq("doc_id", "lang", "source", "n_chars"))
       runBounded(prof, "q_stream_profile_sink", OutputMode.Complete())
@@ -280,12 +270,7 @@ object StreamQueries {
     //    Misra–Gries regime is spec'd differentially against the exact
     //    answer across micro-batch cuts (StreamHeavyHittersSpec). -----------
     "q_stream_heavy" -> ((s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val staged = java.nio.file.Files
-        .createTempDirectory("graft_shh_src").toString
-      docs.repartition(1).write.mode("overwrite").parquet(staged)
-      val schema = s.read.parquet(staged).schema
-      val stream = Streams.fileStream(s, staged, schema)
+      val stream = replay(Tables(s, dir, "documents"))
       val toks = stream.select(explode(filter(split(col("text"), "\\s+"),
         tk => tk =!= "")).as("tok"))
       val top = Streams.streamHeavyHittersExact(toks, col("tok"), 20)
@@ -294,12 +279,7 @@ object StreamQueries {
     // the same audit FROM the dialect: HEAVY_HITTERS on a streaming
     //    relation routes to the streaming exact regime — same oracle
     "q_pig_stream_heavy" -> ((s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val staged = java.nio.file.Files
-        .createTempDirectory("graft_pshh_src").toString
-      docs.repartition(1).write.mode("overwrite").parquet(staged)
-      val schema = s.read.parquet(staged).schema
-      val stream = Streams.fileStream(s, staged, schema)
+      val stream = replay(Tables(s, dir, "documents"))
       val toks = stream.select(explode(filter(split(col("text"), "\\s+"),
         tk => tk =!= "")).as("tok"))
       val top = graft.piglatin.PigScript.query(s,
@@ -311,12 +291,7 @@ object StreamQueries {
     //    is a narrow per-row map, so it runs UNCHANGED on the ingest
     //    stream — same pattern constants, same oracle as q_contains_any
     "q_stream_match" -> ((s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val staged = java.nio.file.Files
-        .createTempDirectory("graft_smatch_src").toString
-      docs.repartition(1).write.mode("overwrite").parquet(staged)
-      val stream = Streams.fileStream(s, staged,
-        s.read.parquet(staged).schema)
+      val stream = replay(Tables(s, dir, "documents"))
       val out = stream.select(col("doc_id"),
           graft.text.MultiMatch.matchAny(col("text"),
             PipelineQueries.scanPatterns).as("m"))
@@ -344,13 +319,8 @@ object StreamQueries {
     "q_stream_dedup_simhash" -> ((s, dir) => {
       val planted = PipelineQueries.plantedDocs(
         Tables(s, dir, "documents"))
-      val staged = java.nio.file.Files
-        .createTempDirectory("graft_sdh_src").toString
-      planted.repartition(1).write.mode("overwrite").parquet(staged)
-      val schema = s.read.parquet(staged).schema
-      val hits = Streams.streamSimhashDedup(
-        Streams.fileStream(s, staged, schema), "doc_id", "text",
-        maxDist = 3)
+      val hits = Streams.streamSimhashDedup(replay(planted), "doc_id",
+        "text", maxDist = 3)
       runBounded(hits.toDF(), "q_stream_dedup_simhash_sink",
           OutputMode.Append())
         .groupBy(col("docId").as("doc_id"))
@@ -365,13 +335,8 @@ object StreamQueries {
     //    backfill (the whole point of hash-derived assignment). Same
     //    oracle as the batch q_split_hash. ----------------------------------
     "q_stream_split" -> ((s, dir) => {
-      val docs = Tables(s, dir, "documents")
-        .select(col("doc_id"), col("lang"))
-      val staged = java.nio.file.Files
-        .createTempDirectory("graft_ssplit_src").toString
-      docs.repartition(1).write.mode("overwrite").parquet(staged)
-      val schema = s.read.parquet(staged).schema
-      val stream = Streams.fileStream(s, staged, schema)
+      val stream = replay(Tables(s, dir, "documents")
+        .select(col("doc_id"), col("lang")))
       val assigned = graft.core.Pipe(stream)
         .splitByHash(Seq("train" -> 80, "val" -> 10, "test" -> 10),
           col("doc_id")).df
@@ -401,11 +366,7 @@ object StreamQueries {
       val corpus = docs.where(col("doc_id") >= 1000000L)
       val bench = docs.where(col("doc_id") < 1000000L &&
         col("doc_id") % 20 === 3)
-      val staged = java.nio.file.Files
-        .createTempDirectory("graft_sdc_src").toString
-      corpus.repartition(1).write.mode("overwrite").parquet(staged)
-      val schema = s.read.parquet(staged).schema
-      val stream = Streams.fileStream(s, staged, schema)
+      val stream = replay(corpus)
       import graft.dedup.Dedup
       val bg = Dedup.hashedShingleDF(bench, "doc_id", "text", 8)
         .select(col("id").as("__bench_id"), explode(col("sh")).as("g"))
@@ -469,9 +430,9 @@ object StreamQueries {
          event_type, COUNT(*) AS cnt,
          CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
          FROM events GROUP BY 1, 2""",
-    // streamMatchSeq semantics — equal to batch Matcher.matchSeq GIVEN
+    // streamMatchSteps semantics — equal to batch Matcher.matchSeq GIVEN
     // per-key event-time order across batches (this replayed file stream
-    // delivers in order; see the ordering contract on streamMatchSeq):
+    // delivers in order; see the ordering contract on streamMatchSteps):
     // every open signup matches the FIRST purchase STRICTLY later than
     // it within 1h (inclusive bound), same-ts purchases never match
     "q_stream_cep" ->

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.cep.Matcher
 
 /** Structured-Streaming equivalents of the reference's stream operators
   * (reference: op/Window.scala, op/SocketRead.scala, op/SocketWrite.scala,
@@ -510,11 +511,24 @@ object Streams {
   }
 
   // ---- streaming CEP (reference: op/Matcher.scala on DStreams) -------------
-  /** 2-step SEQ pattern (A then B within `withinMicros`) on a stream,
-    * via flatMapGroupsWithState: per-key open-starts state with
-    * processing-time timeout eviction, so keys that go quiet do not hold
-    * state forever (unbounded key cardinality would otherwise OOM the
-    * state store). Emits (key, startId, endId) on completion.
+  /** [[streamMatchSteps]] state: the open partials of one key. */
+  case class PatState(partials: List[Matcher.Partial])
+  /** [[streamMatchStepsReordered]] state: the watermark-delayed reorder
+    * buffer plus the scan partials. `flushedUpTo` is the event-time
+    * frontier already fed to the scan (micros) — events at or below it
+    * are too late and are dropped, which is what keeps the per-key feed
+    * order non-decreasing. */
+  case class ReorderState(flushedUpTo: Long,
+                          buffered: List[Matcher.Event],
+                          partials: List[Matcher.Partial])
+  /** Event + the TimestampType column the watermark machinery needs. */
+  case class TimedEvent(key: Long, tsMicros: Long, etype: String, id: Long,
+                        value: Double, eventTime: java.sql.Timestamp)
+
+  /** Pattern scan on a stream: the batch [[Matcher.Automaton]] — every
+    * step shape (Pos, interior NEG; trailing Neg rejected, as in batch)
+    * and all four selection modes — folded over each key's micro-batch
+    * via flatMapGroupsWithState, with the open partials carried in state.
     *
     * ORDERING CONTRACT: events are sorted within each micro-batch, but
     * the scan cannot look backwards across batch boundaries — a start
@@ -522,174 +536,35 @@ object Streams {
     * missed match vs the batch engine. Equivalence with batch
     * `Matcher.matchSeq` therefore holds when per-key event-time order is
     * non-decreasing across batches (true for the replayed file streams
-    * here and for any source that preserves per-key order); out-of-order
-    * sources get the same guarantee from the watermark-delayed reorder
-    * buffer in [[streamMatchStepsReordered]]. */
-  case class SeqState(starts: List[(Long, Long)]) // (startId, startMicros)
-  case class SeqMatch(key: Long, startId: Long, endId: Long)
-
-  /** State/result of the GENERAL n-step streaming SEQ scan: partials
-    * carry (matched ids REVERSED, next PATTERN index, start, last). */
-  case class PatState(partials: List[(List[Long], Int, Long, Long)])
-  case class PatMatch(key: Long, ids: Seq[Long], startMicros: Long,
-                      endMicros: Long)
-  /** [[streamMatchStepsReordered]] state: the watermark-delayed reorder
-    * buffer plus the scan partials. `flushedUpTo` is the event-time
-    * frontier already fed to the scan (micros) — events at or below it
-    * are too late and are dropped, which is what keeps the per-key feed
-    * order non-decreasing. */
-  case class ReorderState(flushedUpTo: Long,
-                          buffered: List[graft.cep.Matcher.Event],
-                          partials: List[(List[Long], Int, Long, Long)])
-  /** Event + the TimestampType column the watermark machinery needs. */
-  case class TimedEvent(key: Long, tsMicros: Long, etype: String, id: Long,
-                        value: Double, eventTime: java.sql.Timestamp)
-
-  private def validatePattern(pattern: Seq[graft.cep.Matcher.Step],
-                              mode: String): Unit = {
-    require(pattern.nonEmpty &&
-      pattern.head.isInstanceOf[graft.cep.Matcher.Pos],
-      "pattern must start with a Pos step")
-    require(pattern.last.isInstanceOf[graft.cep.Matcher.Pos],
-      "pattern must end with a Pos step: a trailing Neg (absence after " +
-        "the final match) is not supported — bound it with a closing " +
-        "Pos step or post-filter the matches")
-    require(graft.cep.Matcher.supportedModes.contains(mode),
-      s"unsupported streaming MATCH_EVENT mode '$mode' — supported: " +
-        graft.cep.Matcher.supportedModes.toSeq.sorted.mkString(", "))
-    require(mode != "contiguity_match" ||
-      pattern.forall(_.isInstanceOf[graft.cep.Matcher.Pos]),
-      "contiguity_match rejects Neg steps: strict contiguity already " +
-        "kills a partial on ANY non-matching event, so a negation " +
-        "window can never fire")
-  }
-
-  /** One pass of the pattern automaton over `events` (sorted here by
-    * (ts, id) — the same order the batch secondary sort delivers),
-    * starting from `initial` open partials. Mirrors
-    * [[graft.cep.Matcher.matchSeq]]'s feed loop STEP FOR STEP — expiry,
-    * NEG kills, first_match slot check, advance/fork, contiguity kill,
-    * step-0 open — so batch and streaming can only drift if one of the
-    * two loops is edited alone (the differential specs would catch it).
-    * Shared by [[streamMatchSteps]] (in-order contract) and
-    * [[streamMatchStepsReordered]] (watermark-buffered). */
-  private def scanEvents(pattern: IndexedSeq[graft.cep.Matcher.Step],
-                         nPos: Int, withinMicros: Long, anyMatch: Boolean,
-                         firstMatch: Boolean, contiguity: Boolean)
-                        (key: Long, events: Seq[graft.cep.Matcher.Event],
-                         initial: List[(List[Long], Int, Long, Long)])
-      : (Seq[PatMatch], List[(List[Long], Int, Long, Long)]) = {
-    def nextPosIdx(from: Int): Int = {
-      var i = from
-      while (i < pattern.length &&
-        !pattern(i).isInstanceOf[graft.cep.Matcher.Pos]) i += 1
-      i
-    }
-    var open = initial
-    val out = scala.collection.mutable.ArrayBuffer.empty[PatMatch]
-    events.sortBy(e => (e.tsMicros, e.id)).foreach { e =>
-      open = open.filter { case (_, _, start, _) =>
-        e.tsMicros - start <= withinMicros }
-      // NEG guards preceding each partial's next Pos step: a negating
-      // event STRICTLY after the last matched step kills the partial
-      // (batch parity — see Matcher.feed; under the non-decreasing feed
-      // order every negator between two Pos steps is seen before the
-      // completing event, so interior NEG needs no delayed emission)
-      open = open.filter { case (_, next, _, last) =>
-        var i = next - 1
-        var alive = true
-        while (i >= 0 && pattern(i).isInstanceOf[graft.cep.Matcher.Neg]) {
-          if (e.tsMicros > last &&
-            pattern(i).asInstanceOf[graft.cep.Matcher.Neg].pred(e))
-            alive = false
-          i -= 1
-        }
-        alive
-      }
-      // first_match slot check BEFORE advancing (batch parity: a
-      // completing event cannot itself re-open the slot)
-      val slotFree = open.isEmpty
-      val advanced = scala.collection.mutable.ListBuffer
-        .empty[(List[Long], Int, Long, Long)]
-      open.foreach { case p @ (ids, next, start, last) =>
-        if (pattern(next).asInstanceOf[graft.cep.Matcher.Pos].pred(e) &&
-            e.tsMicros > last) {
-          val nids = e.id :: ids
-          if (nids.length == nPos)
-            out += PatMatch(key, nids.reverse, start, e.tsMicros)
-          else
-            advanced += ((nids, nextPosIdx(next + 1), start, e.tsMicros))
-          if (anyMatch) advanced += p // fork: original stays open
-        } else if (!contiguity || e.tsMicros <= last) {
-          // non-advancing partials survive, except under strict
-          // contiguity when the event was VISIBLE to them
-          advanced += p
-        }
-      }
-      open = advanced.toList
-      // step 0 opens a new partial (first_match: only into a free slot)
-      if ((!firstMatch || slotFree) &&
-          pattern.head.asInstanceOf[graft.cep.Matcher.Pos].pred(e)) {
-        if (nPos == 1)
-          out += PatMatch(key, Seq(e.id), e.tsMicros, e.tsMicros)
-        else open = (List(e.id), nextPosIdx(1), e.tsMicros, e.tsMicros) :: open
-      }
-    }
-    (out.toSeq, open)
-  }
-
-  /** Arbitrary-length SEQ pattern (type₀ then type₁ … within
-    * `withinMicros`) on a stream — the n-step generalization of
-    * [[streamMatchSeq]] for type-named steps. Delegates to
-    * [[streamMatchSteps]]; see there for the full semantics, including
-    * NEG guards between steps. */
-  def streamMatchPattern(events: Dataset[graft.cep.Matcher.Event],
-                         types: Seq[String], withinMicros: Long,
-                         stateTtlMs: Long = 0L,
-                         mode: String = "skip_till_next_match"): Dataset[PatMatch] = {
-    require(types.nonEmpty, "streamMatchPattern: empty pattern")
-    streamMatchSteps(events,
-      types.map(t => graft.cep.Matcher.Pos(graft.cep.Matcher.typeIs(t))),
-      withinMicros, stateTtlMs, mode)
-  }
-
-  /** General pattern scan on a stream — the full batch
-    * [[graft.cep.Matcher]] step surface including NEG guards between
-    * Pos steps (an interior negating event kills the partial; trailing
-    * Neg rejected, exactly as in batch), mirroring the batch semantics
-    * step for step for all four selection modes via the shared
-    * [[scanEvents]] loop. ORDERING CONTRACT (same as
-    * [[streamMatchSeq]]): per-key event-time order must be
-    * non-decreasing across micro-batches — interior NEG is then exact,
-    * because every negator between two Pos steps is scanned before the
-    * completing event. Out-of-order sources: use
-    * [[streamMatchStepsReordered]]. State is bounded by the WITHIN
-    * horizon (expiry on every event) plus the processing-time TTL for
-    * keys that go quiet. */
-  def streamMatchSteps(events: Dataset[graft.cep.Matcher.Event],
-                       pattern: Seq[graft.cep.Matcher.Step],
+    * here and for any source that preserves per-key order); interior NEG
+    * is then exact, because every negator between two Pos steps is
+    * scanned before the completing event. Out-of-order sources get the
+    * same guarantee from the watermark-delayed reorder buffer in
+    * [[streamMatchStepsReordered]].
+    *
+    * State is bounded by the WITHIN horizon (expiry on every event) plus
+    * the processing-time TTL for keys that go quiet. */
+  def streamMatchSteps(events: Dataset[Matcher.Event],
+                       pattern: Seq[Matcher.Step],
                        withinMicros: Long,
                        stateTtlMs: Long = 0L,
-                       mode: String = "skip_till_next_match"): Dataset[PatMatch] = {
-    validatePattern(pattern, mode)
-    val anyMatch = mode == "skip_till_any_match"
-    val firstMatch = mode == "first_match"
-    val contiguity = mode == "contiguity_match"
-    val pat = pattern.toIndexedSeq
-    val nPos = pat.count(_.isInstanceOf[graft.cep.Matcher.Pos])
+                       mode: String = "skip_till_next_match"): Dataset[Matcher.MatchResult] = {
+    val automaton = new Matcher.Automaton(pattern, withinMicros, mode)
     val spark = events.sparkSession
     import spark.implicits._
+    // TTL > 0 enables processing-time eviction for production streams;
+    // 0 keeps NoTimeout (an unthrottled-trigger query with timeouts spins
+    // continuous empty batches — set a real Trigger alongside a TTL)
     val timeoutConf =
       if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()
     events.groupByKey(_.key)
-      .flatMapGroupsWithState[PatState, PatMatch](
+      .flatMapGroupsWithState[PatState, Matcher.MatchResult](
         OutputMode.Append(), timeoutConf) {
-        case (key, it, state: GroupState[PatState]) =>
+        case (_, it, state: GroupState[PatState]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            val (out, open) = scanEvents(pat, nPos, withinMicros, anyMatch,
-              firstMatch, contiguity)(key, it.toSeq,
+            val (out, open) = automaton.scan(it.toSeq,
               state.getOption.map(_.partials).getOrElse(Nil))
             if (open.isEmpty) state.remove()
             else {
@@ -728,17 +603,12 @@ object Streams {
     * bounded by delay + horizon. Bounded replays that must flush
     * everything append a far-future sentinel event to push the
     * watermark past the real data (standard watermark practice). */
-  def streamMatchStepsReordered(events: Dataset[graft.cep.Matcher.Event],
-                                pattern: Seq[graft.cep.Matcher.Step],
+  def streamMatchStepsReordered(events: Dataset[Matcher.Event],
+                                pattern: Seq[Matcher.Step],
                                 withinMicros: Long,
                                 watermarkDelay: String,
-                                mode: String = "skip_till_next_match"): Dataset[PatMatch] = {
-    validatePattern(pattern, mode)
-    val anyMatch = mode == "skip_till_any_match"
-    val firstMatch = mode == "first_match"
-    val contiguity = mode == "contiguity_match"
-    val pat = pattern.toIndexedSeq
-    val nPos = pat.count(_.isInstanceOf[graft.cep.Matcher.Pos])
+                                mode: String = "skip_till_next_match"): Dataset[Matcher.MatchResult] = {
+    val automaton = new Matcher.Automaton(pattern, withinMicros, mode)
     val spark = events.sparkSession
     import spark.implicits._
     val timed = events.toDF()
@@ -746,22 +616,21 @@ object Streams {
       .withWatermark("eventTime", watermarkDelay)
       .as[TimedEvent]
     timed.groupByKey(_.key)
-      .flatMapGroupsWithState[ReorderState, PatMatch](
+      .flatMapGroupsWithState[ReorderState, Matcher.MatchResult](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, it, state: GroupState[ReorderState]) =>
+        case (_, it, state: GroupState[ReorderState]) =>
           // NOTE: a timer firing is just "the watermark moved" — flush,
           // don't evict (state.hasTimedOut carries no other meaning here)
           val prev = state.getOption.getOrElse(ReorderState(Long.MinValue, Nil, Nil))
           val wmMicros = state.getCurrentWatermarkMs() * 1000L
           val incoming = it.map(t =>
-            graft.cep.Matcher.Event(t.key, t.tsMicros, t.etype, t.id, t.value))
+            Matcher.Event(t.key, t.tsMicros, t.etype, t.id, t.value))
           // too-late events (at or below the flushed frontier) would
           // regress the scan's feed order — drop them (lateness bound)
           val buf = prev.buffered ++
             incoming.filter(_.tsMicros > prev.flushedUpTo)
           val (release, keep) = buf.partition(_.tsMicros <= wmMicros)
-          val (out, open0) = scanEvents(pat, nPos, withinMicros, anyMatch,
-            firstMatch, contiguity)(key, release, prev.partials)
+          val (out, open0) = automaton.scan(release, prev.partials)
           // partials past their WITHIN horizon relative to the watermark
           // can never advance again (every future released event is
           // > wm ≥ start + within) — evict so quiet keys do not leak
@@ -788,83 +657,6 @@ object Streams {
             }
           }
           out.iterator
-      }
-  }
-
-  def streamMatchSeq(events: Dataset[graft.cep.Matcher.Event],
-                     startType: String, endType: String,
-                     withinMicros: Long,
-                     stateTtlMs: Long = 0L,
-                     mode: String = "skip_till_next_match"): Dataset[SeqMatch] = {
-    // full batch Matcher.matchSeq mode surface (2-step SEQ shape).
-    // skip_till_any_match: the batch engine keeps the ORIGINAL partial
-    // open after a completion (s@0,p@10,p@20 emits (s,p10) AND (s,p20)),
-    // so here a completed start stays LIVE until its WITHIN horizon
-    // expires — state is still bounded by the horizon (the filter at the
-    // top of the scan) plus the processing-time TTL for keys that go
-    // quiet, exactly the state contract of the other modes.
-    require(graft.cep.Matcher.supportedModes.contains(mode),
-      s"unsupported streaming MATCH_EVENT mode '$mode' — supported: " +
-        graft.cep.Matcher.supportedModes.toSeq.sorted.mkString(", "))
-    val anyMatch = mode == "skip_till_any_match"
-    val firstMatch = mode == "first_match"
-    val contiguity = mode == "contiguity_match"
-    val spark = events.sparkSession
-    import spark.implicits._
-    // TTL > 0 enables processing-time eviction for production streams;
-    // 0 keeps NoTimeout (an unthrottled-trigger query with timeouts spins
-    // continuous empty batches — set a real Trigger alongside a TTL)
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[SeqState, SeqMatch](
-        OutputMode.Append(), timeoutConf) {
-        case (key, it, state: GroupState[SeqState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var starts = state.getOption.map(_.starts).getOrElse(Nil)
-            val out = scala.collection.mutable.ArrayBuffer.empty[SeqMatch]
-            // micro-batch events are not ordering-guaranteed; sort locally
-            it.toSeq.sortBy(e => (e.tsMicros, e.id)).foreach { e =>
-              starts = starts.filter { case (_, ts) => e.tsMicros - ts <= withinMicros }
-              var completedHere = false
-              if (e.etype == endType) {
-                // batch Matcher.matchSeq requires each step STRICTLY
-                // later than the previous — a same-timestamp end must
-                // not match (it stays available for later ends)
-                val (eligible, sameTs) =
-                  starts.partition { case (_, ts) => ts < e.tsMicros }
-                eligible.foreach { case (sid, _) => out += SeqMatch(key, sid, e.id) }
-                completedHere = eligible.nonEmpty
-                // next/first_match: each start matches its first B only;
-                // any_match: completed starts STAY OPEN (they match every
-                // later B until WITHIN expiry — the batch fork semantics)
-                if (!anyMatch) starts = sameTs
-              } else if (contiguity) {
-                // strict contiguity (batch-engine parity): any visible
-                // event that is not the awaited end KILLS the partial;
-                // timestamp ties stay invisible and survive
-                starts = starts.filter { case (_, ts) => ts >= e.tsMicros }
-              }
-              // first_match: one live start per key — new starts are
-              // ignored while the slot is occupied, and (batch-engine
-              // parity) an event that just completed a match cannot
-              // itself re-open the slot (matters when start and end
-              // types coincide)
-              if (e.etype == startType &&
-                  (!firstMatch || (starts.isEmpty && !completedHere)))
-                starts ::= (e.id, e.tsMicros)
-            }
-            if (starts.isEmpty) state.remove()
-            else {
-              state.update(SeqState(starts))
-              if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            }
-            out.iterator
-          }
       }
   }
 }

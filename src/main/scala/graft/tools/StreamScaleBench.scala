@@ -185,8 +185,8 @@ object StreamScaleBench {
 
     // ---- batch differential under the emission bound -----------------------
     // final watermark = floor(max event ms) - delay; a match emits iff it
-    // released the completing event. matchSeq is the step-mirrored batch
-    // truth (see the differential specs on the shared scan).
+    // released the completing event. matchSeq drives the same automaton
+    // over the sorted table, so this checks the reorder buffer's release.
     val static = spark.read.parquet(dir.toString)
     val maxTs = static.agg(max("tsMicros")).head.getLong(0)
     val wmMicros = (maxTs / 1000L - DelayMicros / 1000L) * 1000L

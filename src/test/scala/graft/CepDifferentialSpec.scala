@@ -104,20 +104,26 @@ class CepDifferentialSpec extends SparkSpec {
     }
   }
 
+  // skip_till_any_match rides along: batch and streaming share one
+  // automaton, so the models are the independent truth for every mode
   test("batch matchSeq (next_match and first_match) equals the in-memory " +
       "model on random streams") {
-    for (seed <- 1 to 8; fm <- Seq(false, true)) {
+    for (seed <- 1 to 8;
+         mode <- Seq("skip_till_next_match", "first_match",
+           "skip_till_any_match")) {
       val evs = randomEvents(seed, 120)
       val within = 8L * 1000000L
       val got = Matcher.matchSeq(
           evs.toDF("key", "tsMicros", "etype", "id", "value")
             .withColumn("tsMicros", timestamp_micros(col("tsMicros"))),
           "key", "tsMicros", "etype", "id", "value", pattern, within,
-          mode = if (fm) "first_match" else "skip_till_next_match")
+          mode = mode)
         .select(element_at(col("ids"), 1), element_at(col("ids"), 2))
         .as[(Long, Long)].collect().toSet
-      assert(got == model(evs, within, fm),
-        s"seed=$seed firstMatch=$fm")
+      val want =
+        if (mode == "skip_till_any_match") anyModel(evs, within)
+        else model(evs, within, mode == "first_match")
+      assert(got == want, s"seed=$seed mode=$mode")
     }
   }
 
@@ -141,8 +147,8 @@ class CepDifferentialSpec extends SparkSpec {
       val input = MemoryStream[Matcher.Event]
       val tbl = s"cep_pat_${seed}_$mode"
       val q = Streams.memorySink(
-        Streams.streamMatchPattern(input.toDS(), Seq("s", "x", "p"),
-          within, mode = mode).toDF(), tbl, OutputMode.Append())
+        Streams.streamMatchSteps(input.toDS(), pattern3, within,
+          mode = mode).toDF(), tbl, OutputMode.Append())
       val rnd = new scala.util.Random(seed + 77)
       var rest = evs.sortBy(e => (e.tsMicros, e.id))
       while (rest.nonEmpty) {
@@ -151,37 +157,10 @@ class CepDifferentialSpec extends SparkSpec {
         rest = rest.drop(k)
       }
       q.processAllAvailable()
-      val got = spark.table(tbl).as[Streams.PatMatch].collect()
+      val got = spark.table(tbl).as[Matcher.MatchResult].collect()
         .map(m => (m.key, m.ids)).toSet
       q.stop()
       assert(got == want, s"seed=$seed mode=$mode")
-    }
-  }
-
-  test("streamMatchPattern on a 2-step pattern equals streamMatchSeq") {
-    for (mode <- Seq("skip_till_next_match", "first_match",
-        "contiguity_match", "skip_till_any_match")) {
-      val evs = randomEvents(11, 60)
-      val within = 8L * 1000000L
-      implicit val sqlCtx = spark.sqlContext
-      def feed[T](tbl: String,
-                  mk: org.apache.spark.sql.Dataset[Matcher.Event] =>
-                    org.apache.spark.sql.DataFrame): Unit = {
-        val input = MemoryStream[Matcher.Event]
-        val q = Streams.memorySink(mk(input.toDS()), tbl, OutputMode.Append())
-        input.addData(evs.sortBy(e => (e.tsMicros, e.id)): _*)
-        q.processAllAvailable(); q.stop()
-      }
-      feed(s"cep_p2_$mode", ds =>
-        Streams.streamMatchPattern(ds, Seq("s", "p"), within,
-          mode = mode).toDF())
-      feed(s"cep_s2_$mode", ds =>
-        Streams.streamMatchSeq(ds, "s", "p", within, mode = mode).toDF())
-      val pat = spark.table(s"cep_p2_$mode").as[Streams.PatMatch]
-        .collect().map(m => (m.key, m.ids.head, m.ids.last)).toSet
-      val seq = spark.table(s"cep_s2_$mode").as[Streams.SeqMatch]
-        .collect().map(m => (m.key, m.startId, m.endId)).toSet
-      assert(pat == seq, s"mode=$mode")
     }
   }
 
@@ -212,7 +191,7 @@ class CepDifferentialSpec extends SparkSpec {
         rest = rest.drop(k)
       }
       q.processAllAvailable()
-      val got = spark.table(tbl).as[Streams.PatMatch].collect()
+      val got = spark.table(tbl).as[Matcher.MatchResult].collect()
         .map(m => (m.key, m.ids)).toSet
       q.stop()
       assert(got == want, s"seed=$seed")
@@ -247,7 +226,7 @@ class CepDifferentialSpec extends SparkSpec {
     // watermark past every real event so all buffered events release
     input.addData(Matcher.Event(99L, 1000L * 1000000L, "z", 999999L, 0.0))
     q.processAllAvailable()
-    val got = spark.table(tbl).as[Streams.PatMatch].collect()
+    val got = spark.table(tbl).as[Matcher.MatchResult].collect()
       .map(m => (m.key, m.ids)).toSet
     q.stop()
     got
@@ -299,7 +278,7 @@ class CepDifferentialSpec extends SparkSpec {
       val input = MemoryStream[Matcher.Event]
       val tbl = s"cep_diff_${seed}_$mode"
       val q = Streams.memorySink(
-        Streams.streamMatchSeq(input.toDS(), "s", "p", within, mode = mode)
+        Streams.streamMatchSteps(input.toDS(), pattern, within, mode = mode)
           .toDF(), tbl, OutputMode.Append())
       // feed in event-time order (streaming state evolves forward), cut
       // into random micro-batches
@@ -311,8 +290,8 @@ class CepDifferentialSpec extends SparkSpec {
         rest = rest.drop(k)
       }
       q.processAllAvailable()
-      val got = spark.table(tbl)
-        .as[Streams.SeqMatch].collect().map(m => (m.startId, m.endId)).toSet
+      val got = spark.table(tbl).as[Matcher.MatchResult].collect()
+        .map(m => (m.ids(0), m.ids(1))).toSet
       q.stop()
       val want = mode match {
         case "contiguity_match" => contiguityModel(evs, within)

@@ -165,10 +165,18 @@ class StreamingSpec extends SparkSpec {
     assert(row._3 == "und") // too short for a stopword profile
   }
 
+  private val signupPurchase = Seq(Matcher.Pos(Matcher.typeIs("signup")),
+    Matcher.Pos(Matcher.typeIs("purchase")))
+
+  /** (key, start id, end id) of each 2-step match in a memory sink. */
+  private def pairs(table: String): Set[(Long, Long, Long)] =
+    spark.table(table).as[Matcher.MatchResult].collect()
+      .map(m => (m.key, m.ids.head, m.ids.last)).toSet
+
   test("streaming CEP via flatMapGroupsWithState matches across batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Matcher.Event]
-    val matches = Streams.streamMatchSeq(input.toDS(), "signup", "purchase",
+    val matches = Streams.streamMatchSteps(input.toDS(), signupPurchase,
       withinMicros = 100L * 1000000L)
     val q = Streams.memorySink(matches.toDF(), "cep_out", OutputMode.Append())
     // batch 1: signup only; batch 2: purchase — state must carry over
@@ -176,16 +184,16 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     input.addData(Matcher.Event(7L, 5000000L, "purchase", 2L, 0.0))
     q.processAllAvailable()
-    val rows = spark.table("cep_out").as[Streams.SeqMatch].collect().toSet
+    val rows = pairs("cep_out")
     q.stop()
-    assert(rows == Set(Streams.SeqMatch(7L, 1L, 2L)))
+    assert(rows == Set((7L, 1L, 2L)))
   }
 
   test("streaming CEP matches batch semantics: same-timestamp end never " +
       "matches, but stays open for later ends") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Matcher.Event]
-    val matches = Streams.streamMatchSeq(input.toDS(), "signup", "purchase",
+    val matches = Streams.streamMatchSteps(input.toDS(), signupPurchase,
       withinMicros = 100L * 1000000L)
     val q = Streams.memorySink(matches.toDF(), "cep_ts_out", OutputMode.Append())
     input.addData(
@@ -193,16 +201,16 @@ class StreamingSpec extends SparkSpec {
       Matcher.Event(7L, 1000000L, "purchase", 2L, 0.0), // same ts: no match
       Matcher.Event(7L, 2000000L, "purchase", 3L, 0.0)) // strictly later
     q.processAllAvailable()
-    val rows = spark.table("cep_ts_out").as[Streams.SeqMatch].collect().toSet
+    val rows = pairs("cep_ts_out")
     q.stop()
-    assert(rows == Set(Streams.SeqMatch(7L, 1L, 3L)))
+    assert(rows == Set((7L, 1L, 3L)))
   }
 
   test("streaming first_match keeps one live start per key, like the " +
       "batch engine, across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Matcher.Event]
-    val matches = Streams.streamMatchSeq(input.toDS(), "signup", "purchase",
+    val matches = Streams.streamMatchSteps(input.toDS(), signupPurchase,
       withinMicros = 100L * 1000000L, mode = "first_match")
     val q = Streams.memorySink(matches.toDF(), "cep_fm_out", OutputMode.Append())
     // batch 1: two signups — the second must be IGNORED (slot occupied)
@@ -217,13 +225,14 @@ class StreamingSpec extends SparkSpec {
       Matcher.Event(7L, 4000000L, "signup", 4L, 0.0),
       Matcher.Event(7L, 5000000L, "purchase", 5L, 0.0))
     q.processAllAvailable()
-    val rows = spark.table("cep_fm_out").as[Streams.SeqMatch].collect().toSet
+    val rows = pairs("cep_fm_out")
     q.stop()
-    assert(rows == Set(Streams.SeqMatch(7L, 1L, 3L), Streams.SeqMatch(7L, 4L, 5L)))
+    assert(rows == Set((7L, 1L, 3L), (7L, 4L, 5L)))
     val err = intercept[IllegalArgumentException] {
-      Streams.streamMatchSeq(input.toDS(), "a", "b", 1L, mode = "recent_match")
+      Streams.streamMatchSteps(input.toDS(), signupPurchase, 1L,
+        mode = "recent_match")
     }
-    assert(err.getMessage.contains("unsupported streaming MATCH_EVENT mode"))
+    assert(err.getMessage.contains("unsupported MATCH_EVENT mode"))
   }
 
   test("windowed stream-stream join matches within the event-time gap") {
