@@ -36,12 +36,18 @@ object Tables {
 
   /** The table's parquet schema as Spark infers it (before [[normalize]]),
     * inferred at most once per session while its files stay unchanged. */
-  def schema(spark: SparkSession, sfDir: String, name: String): StructType = {
-    val p = new Path(path(sfDir, name))
+  def schema(spark: SparkSession, sfDir: String, name: String): StructType =
+    schemaAt(spark, path(sfDir, name))
+
+  /** The parquet schema Spark infers for `path` (a file or a directory),
+    * cached like [[schema]]. A path that does not exist as such — a glob,
+    * or a missing path, which then fails with Spark's own error — is
+    * inferred on every call and never cached. */
+  def schemaAt(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a missing path lists as empty, is never cached, and fails in the
-    // read below with Spark's own error
-    val files = if (fs.exists(p)) listing(fs, p) else Nil
+    if (!fs.exists(p)) return spark.read.parquet(path).schema
+    val files = listing(fs, p)
     val entries = cache.synchronized {
       cache.computeIfAbsent(spark,
         _ => new java.util.concurrent.ConcurrentHashMap[String, Entry]())
@@ -49,7 +55,7 @@ object Tables {
     val key = fs.makeQualified(p).toString
     Option(entries.get(key)).filter(_.files == files).map(_.schema)
       .getOrElse {
-        val inferred = spark.read.parquet(p.toString).schema
+        val inferred = spark.read.parquet(path).schema
         entries.put(key, Entry(files, inferred))
         inferred
       }

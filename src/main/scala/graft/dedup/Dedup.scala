@@ -449,70 +449,144 @@ object Dedup {
       semanticPairs(df, idCol, vecCol, centroids, threshold))
 
   // ---- connected components (cluster the pair graph) -----------------------
-  /** Min-label propagation over a (id_a, id_b) pair graph until fixpoint:
-    * each doc converges to the min id of its component ("canonical" doc).
-    * Iterations = graph diameter (tiny for dup clusters); each step is one
-    * shuffle-join, checkpointed to keep lineage flat.
+  /** Connected components of an (id_a, id_b) pair graph: one (id, label)
+    * row per node, where label is the min id of the node's component (the
+    * "canonical" doc). Both columns keep the input id type. A null id names
+    * no node: integral rows holding one are dropped.
     *
-    * `checkpointDir`: when set, each iteration uses a RELIABLE checkpoint
-    * (parquet under the dir) — survives executor loss, the right choice
-    * for multi-hour 100 TB jobs. When unset, falls back to
-    * `localCheckpoint` (executor-local blocks: fast, but lost state kills
-    * the job on executor failure — acceptable only for short runs). */
-  /** `driverEdgeThreshold`: edge sets at or below this size (and with
-    * integral ids — other id types always iterate) are solved by an exact
-    * one-pass union–find on the driver: the broadcast-threshold
-    * philosophy — 2M boxed edge tuples plus the DSU map cost a few
-    * hundred MB of driver heap and milliseconds of CPU, versus
-    * O(diameter) distributed label-propagation ROUNDS each costing whole
-    * shuffles. Larger sets take the iterative distributed path. Pass 0 to
-    * force the distributed path (the specs do). */
+    * Integral ids take one of two paths:
+    *  - driver: edge sets at or below `driverEdgeThreshold` are collected
+    *    and solved by one union–find on the driver — the broadcast-threshold
+    *    philosophy: 2M edges cost about 150 MB of driver heap (the
+    *    collected tuples plus the union–find arrays) and milliseconds of
+    *    CPU, versus O(diameter) distributed rounds each
+    *    costing whole shuffles. Pass 0 to force the distributed path (the
+    *    specs and the chain-block queries do).
+    *  - contraction: each partition runs the same union–find over its own
+    *    edges (min id as root) and emits (node, local root) for every node
+    *    it saw — narrow, no shuffle. Task memory is O(partition), like a
+    *    sort buffer: about 32 B per edge plus 4 B per distinct node, in
+    *    primitive arrays. One shuffle groups these stars by node into
+    *    (id, rmin, roots), checkpointed; an accumulator in that same job
+    *    counts the nodes with two or more local roots (a retried task can
+    *    only over-count, so a 0 is sound). With none, rmin IS the global
+    *    label and nothing more runs. Otherwise the cross-partition residue
+    *    — the edges (rmin, r) for each such node's other roots — runs the
+    *    min-label loop below, and one join relabels every node with its
+    *    rmin's residue label (two local components that share a root share
+    *    that node, and each root is the minimum of its local component, so
+    *    the minimum over a residue component's roots is the global minimum).
+    *
+    * Other id types (strings) run the min-label loop over the whole graph:
+    * neighbor-min propagation plus two pointer jumps per round, each round
+    * checkpointed to keep lineage flat. `maxIter` bounds that loop's rounds
+    * (on the residue, for integral ids); the last round must change no
+    * label, else the call fails with "did not converge".
+    *
+    * `checkpointDir`: when set, every checkpoint is RELIABLE (parquet
+    * under the dir) — survives executor loss, the right choice for
+    * multi-hour 100 TB jobs. When unset, falls back to `localCheckpoint`
+    * (executor-local blocks: fast, but lost state kills the job on
+    * executor failure — acceptable only for short runs). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
                           checkpointDir: Option[String] = None,
                           driverEdgeThreshold: Long = 2000000L): DataFrame = {
     val spark = pairs.sparkSession
+    import spark.implicits._
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def ckpt(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     // the id columns are looked up BY NAME — the frame may carry extra
     // or reordered columns (a positional take(2) once chose the driver
     // path from a leading non-id column and crashed the Long decode)
+    val ids = pairs.select(col("id_a"), col("id_b"))
+    // the type both id columns widen to (what a union of them yields)
+    val idType = ids.select(col("id_a").as("id"))
+      .union(ids.select(col("id_b").as("id"))).schema.head.dataType
+    def typed(labels: DataFrame): DataFrame =
+      labels.select(col("id").cast(idType).as("id"),
+        col("label").cast(idType).as("label"))
+    val edges = ids.select(col("id_a").cast(idType).as("a"),
+      col("id_b").cast(idType).as("b"))
     val integralIds = Seq("id_a", "id_b").forall(n =>
-      pairs.schema.fields.find(_.name == n).exists(f =>
-        Seq(LongType, IntegerType, ShortType, ByteType).contains(f.dataType)))
-    // persisted: the probe and the collect below share one computation of
-    // the caller's upstream plan, and on the iterative path the edge set
-    // feeds every round (plus the label init)
-    val pairsP = graft.core.Intermediates.track(
-      pairs.select(col("id_a"), col("id_b")).persist())
+      Seq(LongType, IntegerType, ShortType, ByteType)
+        .contains(ids.schema(n).dataType))
+    if (!integralIds) return typed(minLabelLoop(edges, maxIter, ckpt))
+
+    val probed = driverEdgeThreshold > 0
+    // persisted only when probed: the size probe and the solve that
+    // follows would otherwise both run the caller's upstream plan
+    val longEdges = {
+      val e = edges.where(col("a").isNotNull && col("b").isNotNull)
+        .select(col("a").cast(LongType), col("b").cast(LongType))
+      if (probed) graft.core.Intermediates.track(e.persist()) else e
+    }.as[(Long, Long)]
     val probeLimit = math.min(driverEdgeThreshold + 1, Int.MaxValue.toLong).toInt
+    if (probed && longEdges.limit(probeLimit).count() <= driverEdgeThreshold)
+      return typed(
+        unionFindRoots(longEdges.collect().iterator).toSeq.toDF("id", "label"))
 
-    if (driverEdgeThreshold > 0 && integralIds &&
-        pairsP.limit(probeLimit).count() <= driverEdgeThreshold) {
-      import spark.implicits._
-      val es = pairsP.select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (u, v) =>
-        val (ru, rv) = (find(u), find(v))
-        if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
-      }
-      val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
-      return nodes.map(n => (n, find(n))).toSeq.toDF("id", "label")
+    val multiRoot = spark.sparkContext.longAccumulator("cc multi-root nodes")
+    val stars = ckpt(longEdges.mapPartitions(unionFindRoots)
+      .toDF("id", "root")
+      .groupBy("id").agg(min("root").as("rmin"), collect_set("root").as("roots"))
+      .as[(Long, Long, Array[Long])]
+      .map { s => if (s._3.length > 1) multiRoot.add(1); s }
+      .toDF("id", "rmin", "roots"))
+    if (multiRoot.sum == 0)
+      return typed(stars.select(col("id"), col("rmin").as("label")))
+    val residue = stars.where(size(col("roots")) > 1)
+      .select(col("rmin").as("a"), explode(col("roots")).as("b"))
+      .where(col("a") =!= col("b"))
+    val rootLabels = minLabelLoop(residue, maxIter, ckpt)
+    typed(ckpt(stars.join(rootLabels, stars("rmin") === rootLabels("id"), "left")
+      .select(stars("id"), coalesce(rootLabels("label"), stars("rmin")).as("label"))))
+  }
+
+  /** Union–find over one batch of edges (a partition's, or all of them on
+    * the driver path): emits (node, root) for every node seen, root = the
+    * min id of the node's component within the batch. Primitive arrays
+    * only: edge endpoints are buffered in a `long[]`, the distinct ids
+    * sorted, and an `int[]` parent over their indices (path halving) —
+    * because the ids are sorted, the smaller index is the smaller id, so
+    * linking the larger root under the smaller keeps the min as root. */
+  private def unionFindRoots(es: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var ends = new Array[Long](1024)
+    var n = 0
+    es.foreach { case (u, v) =>
+      if (n + 2 > ends.length) ends = java.util.Arrays.copyOf(ends, ends.length * 2)
+      ends(n) = u; ends(n + 1) = v; n += 2
     }
+    val ids = java.util.Arrays.copyOf(ends, n)
+    java.util.Arrays.sort(ids)
+    var m = 0
+    for (i <- 0 until n) if (m == 0 || ids(i) != ids(m - 1)) { ids(m) = ids(i); m += 1 }
+    val parent = Array.range(0, m)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, m, id)
+    for (i <- 0 until n by 2) {
+      val (ru, rv) = (find(index(ends(i))), find(index(ends(i + 1))))
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+    }
+    Iterator.range(0, m).map(i => (ids(i), ids(find(i))))
+  }
 
+  /** Min-label propagation over an (a, b) edge set until no label changes:
+    * each round is one edges⋈labels join, two pointer jumps and a
+    * checkpoint. Returns (id, label) for every endpoint, read from the
+    * last round's checkpoint. */
+  private def minLabelLoop(pairs: DataFrame, maxIter: Int,
+                           ckpt: DataFrame => DataFrame): DataFrame = {
+    // both orientations in one pass over `pairs` (an explode, not a
+    // union, which would run the caller's plan twice)
     val edges = graft.core.Intermediates.track(
-      pairsP.select(col("id_a").as("a"), col("id_b").as("b"))
-        .union(pairsP.select(col("id_b").as("a"), col("id_a").as("b")))
-        .persist())
+      pairs.select(explode(array(struct(col("a"), col("b")),
+          struct(col("b").as("a"), col("a").as("b")))).as("e"))
+        .select("e.*").persist())
     var labels = edges.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
     var converged = false

@@ -1757,7 +1757,10 @@ class PigCompiler(spark: SparkSession) {
           fs.map(f => StructField(f.name, StringType))))).csv(path)
       case "TextLoader" => spark.read.text(path)
       case "JsonStorage" => spark.read.json(path)
-      case "BinStorage" | "ParquetStorage" => spark.read.parquet(path)
+      // the schema comes from Tables' per-session cache: no footer-reading
+      // inference job while the files stay unchanged
+      case "BinStorage" | "ParquetStorage" =>
+        spark.read.schema(graft.core.Tables.schemaAt(spark, path)).parquet(path)
       case "RDFFileStorage" => graft.rdf.Rdf.loadNTriplesRaw(spark, path)
       // WARC crawl segments (graft dialect): full record schema; project
       // with FOREACH (payload is `content` binary). 'stream' makes the

@@ -936,7 +936,9 @@ object PipelineQueries {
     }),
     // -- connected components as a first-class relation (the cluster
     //    resolution under every near-dup family, exercised here on the
-    //    DISTRIBUTED path: 16-id chain blocks, closed-form truth) -----------
+    //    DISTRIBUTED path: each partition's union-find contracts its
+    //    16-id chain blocks, and only blocks cut by a partition boundary
+    //    reach the residue loop; closed-form truth) ------------------------
     "q_connected_components" -> ((s, dir) => {
       val e = t(s, dir, "documents")
         .where(col("doc_id") % 16 =!= 0)

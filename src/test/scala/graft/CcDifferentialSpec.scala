@@ -5,8 +5,9 @@ import graft.dedup.Dedup
 /** Differential testing for connectedComponents: random graphs across
   * seeds and densities (isolated self-loop nodes, long chains, dense
   * blobs, duplicate and reversed edges arise by construction), each
-  * solved by BOTH execution paths — the iterative pointer-jumping path
-  * (driverEdgeThreshold = 0) and the driver union-find shortcut — and
+  * solved by BOTH execution paths — the distributed path (partition-local
+  * union-find, then pointer jumping on the cross-partition residue;
+  * driverEdgeThreshold = 0) and the driver union-find shortcut — and
   * compared against a plain-Scala union-find model. Labels are exact:
   * every node must map to the MINIMUM id of its component. */
 class CcDifferentialSpec extends SparkSpec {

@@ -470,6 +470,26 @@ class PigLatinSpec extends SparkSpec {
     assert(a.orderBy("id").as[(Int, String, Option[String])].collect().toSeq ==
       Seq((1, "a", None), (2, "b", Some("c")), (3, "d", Some("e"))))
   }
+
+  test("ParquetStorage LOAD reuses the cached schema until the files change") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pigparquet")
+    val path = s"$dir/t.parquet"
+    def load() = PigScript.run(spark,
+      s"a = LOAD '$path' USING ParquetStorage();").relation("a")
+    (1L to 5L).map(i => (i, s"v$i")).toDF("id", "v")
+      .write.mode("overwrite").parquet(path)
+    assert(load().columns.toSeq == Seq("id", "v"))
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { again = load() } == 0,
+      "a second LOAD of an unchanged path infers no schema")
+    assert(again.count() == 5)
+    (1L to 3L).map(i => (i, s"w$i", i * 2)).toDF("id", "v", "extra")
+      .write.mode("overwrite").parquet(path)
+    val rewritten = load()
+    assert(rewritten.columns.toSeq == Seq("id", "v", "extra"))
+    assert(rewritten.orderBy("id").as[(Long, String, Long)].collect().toSeq ==
+      Seq((1L, "w1", 2L), (2L, "w2", 4L), (3L, "w3", 6L)))
+  }
 }
 
 class RdfSpec extends SparkSpec {

@@ -179,15 +179,26 @@ class DedupSpec extends SparkSpec {
 
   test("connected components collapse transitive chains") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val ccDf = Dedup.connectedComponents(pairs)
-    // the returned frame must READ the checkpointed final iteration —
-    // a plan that still contains the label-propagation join would
-    // re-derive it (and the convergence test would have paid it twice)
-    assert(!ccDf.queryExecution.optimizedPlan.toString.contains("Join"),
-      "result should scan the checkpoint, not recompute the iteration join")
-    val cc = ccDf.as[(Long, Long)].collect().toMap
-    assert(cc(1L) == 1L && cc(2L) == 1L && cc(3L) == 1L)
-    assert(cc(10L) == 10L && cc(11L) == 10L)
+    // the driver path, then the distributed path with every edge in one
+    // partition (no residue) and with one edge per partition (the
+    // cross-partition residue runs the label loop and the join-back)
+    val cases = Seq(
+      "driver" -> Dedup.connectedComponents(pairs),
+      "one partition" -> Dedup.connectedComponents(pairs.coalesce(1),
+        driverEdgeThreshold = 0L),
+      "residue" -> Dedup.connectedComponents(spark.sparkContext
+        .parallelize(Seq((1L, 2L), (2L, 3L), (10L, 11L)), 3)
+        .toDF("id_a", "id_b"), driverEdgeThreshold = 0L))
+    for ((name, ccDf) <- cases) {
+      // the returned frame must READ a checkpoint — a plan that still
+      // contains the label-propagation or join-back join would re-derive
+      // it (and the convergence test would have paid it twice)
+      assert(!ccDf.queryExecution.optimizedPlan.toString.contains("Join"),
+        s"$name: result should scan the checkpoint, not recompute a join")
+      val cc = ccDf.as[(Long, Long)].collect().toMap
+      assert(cc(1L) == 1L && cc(2L) == 1L && cc(3L) == 1L, name)
+      assert(cc(10L) == 10L && cc(11L) == 10L, name)
+    }
   }
 }
 
