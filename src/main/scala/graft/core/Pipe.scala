@@ -373,11 +373,22 @@ final case class Pipe(df: DataFrame) {
   def orderByCols(cols: Column*): Pipe = Pipe(df.orderBy(cols: _*))
 
   // ---- UNION / CROSS / set ops -------------------------------------------
-  /** reference: op/Union.scala. ONSCHEMA semantics via unionByName. */
+  /** reference: op/Union.scala. Pig `UNION ONSCHEMA`: inputs align by
+    * column name, and a column missing from an input null-pads. */
   def unionWith(others: Pipe*): Pipe =
-    // ONSCHEMA semantics: missing columns null-pad instead of failing
     Pipe(others.foldLeft(df)((a, p) =>
       a.unionByName(p.df, allowMissingColumns = true)))
+
+  /** Plain Pig `UNION`: positional. Every input must have this pipe's
+    * arity, and this pipe's column names win. Bag semantics (UNION ALL). */
+  def unionPositional(others: Pipe*): Pipe =
+    Pipe(others.foldLeft(df) { (l, p) =>
+      require(l.columns.length == p.df.columns.length,
+        s"UNION arity mismatch: ${l.columns.length} vs " +
+          s"${p.df.columns.length} columns (use UNION ONSCHEMA to " +
+          "align by name)")
+      l.union(p.df.toDF(l.columns: _*))
+    })
 
   /** reference: op/Cross.scala. Catalyst broadcasts the small side. */
   def crossWith(other: Pipe): Pipe = Pipe(df.crossJoin(other.df))
@@ -426,13 +437,17 @@ final case class Pipe(df: DataFrame) {
   }
 
   // ---- GROUP / COGROUP ------------------------------------------------------
-  /** reference: op/Grouping.scala. Pig `GROUP a BY k` yields (group, bag).
-    * The bag is materialized ONLY here; aggregate-only consumers should use
-    * [[groupAgg]] which keeps the partial-aggregation (map-side combine) path. */
+  /** reference: op/Grouping.scala. Pig `GROUP a BY k` yields (group, bag):
+    * `group` is the key, a struct of several keys, or 'all' for no keys
+    * (`GROUP a ALL`). The bag is materialized ONLY here; aggregate-only
+    * consumers should use [[groupAgg]] which keeps the partial-aggregation
+    * (map-side combine) path. */
   def groupByBag(bagName: String, keys: Column*): Pipe = {
-    val groupCol = if (keys.size == 1) keys.head.as("group")
-                   else struct(keys: _*).as("group")
-    val valueCols = struct(df.columns.map(col).toIndexedSeq: _*)
+    val groupCol =
+      if (keys.isEmpty) lit("all").as("group")
+      else if (keys.size == 1) keys.head.as("group")
+      else struct(keys: _*).as("group")
+    val valueCols = struct(df.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
     Pipe(df.groupBy(groupCol).agg(collect_list(valueCols).as(bagName)))
   }
 
@@ -445,25 +460,19 @@ final case class Pipe(df: DataFrame) {
   def groupAgg(keys: Seq[Column], aggs: Seq[Column]): Pipe =
     Pipe(df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*))
 
-  /** reference: op/Grouping.scala with >1 input (COGROUP). Bags per input,
-    * full-outer joined on the key; absent groups get empty bags. */
-  def cogroupWith(other: Pipe, leftKeys: Seq[Column], rightKeys: Seq[Column],
-                  leftBag: String = "l", rightBag: String = "r"): Pipe = {
-    val l = Pipe(df).groupByBag(leftBag, leftKeys: _*).df
-    val r = other.groupByBag(rightBag, rightKeys: _*).df
-      .withColumnRenamed("group", "group_r")
-    val joined = l.join(r, l("group") <=> r("group_r"), "full_outer")
-    Pipe(joined.select(
-      coalesce(l("group"), r("group_r")).as("group"),
-      coalesce(l(leftBag), array().cast(l.schema(leftBag).dataType)).as(leftBag),
-      coalesce(r(rightBag), array().cast(r.schema(rightBag).dataType)).as(rightBag)))
-  }
-
   // ---- SPLIT INTO -------------------------------------------------------------
   /** reference: op/SplitInto.scala. One pipe per predicate; the shared scan is
     * read once per branch (Catalyst caches nothing implicitly — callers can
-    * `.materialize` the input if all branches are consumed). */
+    * `.materialize` the input if all branches are consumed). A row whose
+    * predicate is null goes to no branch. */
   def splitInto(conds: Column*): Seq[Pipe] = conds.map(c => Pipe(df.filter(c)))
+
+  /** Pig `SPLIT … OTHERWISE`: the rows [[splitInto]] routes to none of
+    * `conds`, i.e. every condition is false or null. With no conditions,
+    * every row. */
+  def splitOtherwise(conds: Column*): Pipe =
+    Pipe(df.filter(conds.map(c => !c || c.isNull).reduceOption(_ && _)
+      .getOrElse(lit(true))))
 
   // ---- TOP / RANK ----------------------------------------------------------------
   /** reference: op/Top.scala. Global top-n: Spark plans sort+limit as
@@ -1009,6 +1018,28 @@ final case class Pipe(df: DataFrame) {
 }
 
 object Pipe {
+  /** reference: op/Grouping.scala with n inputs: Pig `COGROUP a BY ka,
+    * b BY kb, …`. Each (pipe, keys, bagName) input becomes (group, bag)
+    * through [[Pipe.groupByBag]]; the bags are full-outer joined on `group`
+    * with null-safe `<=>`, so null keys form one group across the inputs
+    * (Pig keeps each input's null group apart). A group missing from an
+    * input gets an EMPTY bag of that input's bag type, never null (COUNT
+    * over it is 0). Output: `group`, then one bag per input. */
+  def cogroup(inputs: (Pipe, Seq[Column], String)*): Pipe = {
+    val bagNames = inputs.map(_._3)
+    require(bagNames.distinct.size == bagNames.size && !bagNames.contains("group"),
+      s"cogroup: bag names must be distinct and not 'group': ${bagNames.mkString(", ")}")
+    val joined = inputs.map { case (p, keys, bag) => p.groupByBag(bag, keys: _*).df }
+      .reduceLeft { (l, r0) =>
+        val r = r0.withColumnRenamed("group", "group_r")
+        l.join(r, l("group") <=> r("group_r"), "full_outer")
+          .select(coalesce(l("group"), r("group_r")).as("group") +:
+            (l.columns.tail ++ r.columns.tail).map(c => col(s"`$c`")): _*)
+      }
+    Pipe(joined.select(col("group") +: bagNames.map(b =>
+      coalesce(col(s"`$b`"), array().cast(joined.schema(b).dataType)).as(b)): _*))
+  }
+
   /** REPL-safe per-partition offset lookup: cumulative offsets as a DENSE
     * long-array literal indexed by partition id (1-based `element_at`).
     * The previous `typedLit(Map[Int, Long])` needs TypeTag reflection

@@ -30,6 +30,11 @@ object Tables {
   /** Location of table `name` under a data directory. */
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
+  /** Where queries and specs write the files they derive and read back:
+    * `target/graft-data` under the working directory (sbt's project base). */
+  private[graft] def derivedDir: String =
+    new java.io.File("target/graft-data").getAbsolutePath
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     normalize(spark.read.schema(schema(spark, sfDir, name))
       .parquet(path(sfDir, name)))

@@ -462,18 +462,23 @@ class PigCompiler(spark: SparkSession) {
     case _ => e
   }
 
-  /** Materialize a grouped relation into (group, bag) form. */
-  private def materializeGroup(g: GroupedRel): DataFrame = {
-    val in = g.input
-    val rowStruct = struct(in.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-    if (g.keys.isEmpty)
-      // GROUP ALL — keys is empty, so the keyed branch's keys.head would throw
-      in.groupBy(lit("all").as("group")).agg(collect_list(rowStruct).as(g.bagName))
-    else {
-      val keyCol = if (g.keyIsStruct) struct(g.keys: _*).as("group")
-                   else g.keys.head.as("group")
-      in.groupBy(keyCol).agg(collect_list(rowStruct).as(g.bagName))
-    }
+  /** Pig's `in::field` output names for a JOIN, CROSS or SPATIAL_JOIN
+    * input, renamed in one projection. */
+  private def prefixed(in: String, df: DataFrame): DataFrame =
+    df.toDF(df.columns.map(c => s"$in::$c").toIndexedSeq: _*)
+
+  /** [[prefixed]], plus the input's `in::w_start` window column if it has
+    * one. A WINDOW'd streaming input (one with w_start) is watermarked on
+    * it so the stream-stream join's per-window state is evictable; delay
+    * 0 because the reference's DStream windows admit no late data (ref:
+    * codegen/flink/emitter/StreamJoinEmitter.scala). */
+  private def windowPrefixed(in: String, df0: DataFrame)
+      : (DataFrame, Option[Column]) = {
+    val df = if (df0.isStreaming && df0.columns.contains("w_start"))
+      df0.withWatermark("w_start", "0 seconds") else df0
+    val renamed = prefixed(in, df)
+    (renamed, if (df.columns.contains("w_start"))
+      Some(renamed(s"`$in::w_start`")) else None)
   }
 
   // ---- statement execution -------------------------------------------------
@@ -583,8 +588,7 @@ class PigCompiler(spark: SparkSession) {
       }
 
     case ForeachNested(a, in, assigns, items0) =>
-      val rel = env(in)
-      val base = rel.grouped.map(materializeGroup).getOrElse(rel.df())
+      val base = env(in).df()
       // `*` in a nested FOREACH means the INPUT relation's columns — not
       // the nested aliases added below (reference nforeach2.pig:
       // GENERATE *, COUNT(r1) emits (group, bag, cnt), not the temp bags)
@@ -621,61 +625,32 @@ class PigCompiler(spark: SparkSession) {
       })
 
     case Group(a, in, keys, all) =>
-      val rel = env(in)
-      val input = rel.df()
+      val input = relation(in)
       val keyCols = keys.map(k => compileExpr(input, k))
       val g = GroupedRel(input, keyCols, keyIsStruct = keys.length > 1,
         bagName = in, keyExprs = keys)
-      env(a) = Rel(() => materializeGroup(g), grouped = Some(g))
+      env(a) = Rel(() => graft.core.Pipe(input).groupByBag(in, keyCols: _*).df,
+        grouped = Some(g))
 
     case CoGroup(a, ins) =>
       val parts = ins.map { case (in, keys) =>
         val df = relation(in)
-        val keyCols = keys.map(k => compileExpr(df, k))
-        val g = GroupedRel(df, keyCols, keyIsStruct = keys.length > 1, in)
-        materializeGroup(g)
+        (graft.core.Pipe(df), keys.map(k => compileExpr(df, k)), in)
       }
-      env(a) = Rel(() => {
-        val joined = parts.reduceLeft { (l, r) =>
-          val rr = r.withColumnRenamed("group", "group__r")
-          l.join(rr, l("group") <=> rr("group__r"), "full_outer")
-            .withColumn("group", coalesce(l("group"), rr("group__r")))
-            .drop("group__r")
-        }
-        // Pig semantics: a group missing from one input contributes an
-        // EMPTY bag, never null (COUNT over it must be 0; same coalesce
-        // Pipe.cogroupWith applies)
-        joined.select(col("group") +:
-          joined.columns.filterNot(_ == "group").map(c =>
-            coalesce(col(s"`$c`"),
-              array().cast(joined.schema(c).dataType)).as(c)): _*)
-      })
+      env(a) = Rel(() => graft.core.Pipe.cogroup(parts: _*).df)
 
     case Join(a, ins, joinType) =>
-      val prefixed = ins.map { case (in, keys) =>
-        val df0 = relation(in)
-        // a WINDOW'd streaming relation carries w_start: watermark it so
-        // the stream-stream join's per-window state is evictable (the
-        // window equality below then gives Spark a state-key watermark —
-        // delay 0 because the reference's DStream windows admit no late
-        // data; ref: codegen/flink/emitter/StreamJoinEmitter.scala)
-        val df = if (df0.isStreaming && df0.columns.contains("w_start"))
-          df0.withWatermark("w_start", "0 seconds") else df0
-        val renamed = df.columns.foldLeft(df)((d, c) =>
-          d.withColumnRenamed(c, s"$in::$c"))
-        val keyCols = keys.map(k => compileExpr(renamed, k match {
-          case FieldRef(p) => FieldRef(p); case x => x }))
-        val wStart = if (renamed.columns.contains(s"$in::w_start"))
-          Some(renamed(s"$in::w_start")) else None
-        (renamed, keyCols, wStart)
+      val inputs = ins.map { case (in, keys) =>
+        val (renamed, wStart) = windowPrefixed(in, relation(in))
+        (renamed, keys.map(k => compileExpr(renamed, k)), wStart)
       }
-      prefixed.find { case (df, _, w) => df.isStreaming && w.isEmpty }
+      inputs.find { case (df, _, w) => df.isStreaming && w.isEmpty }
         .foreach { case (_, _, _) => sys.error(
           "JOIN on streaming relations requires WINDOW'd inputs (the " +
             "reference joins streams per tumbling window — apply " +
             "`w = WINDOW rel RANGE n UNIT SLIDE RANGE n UNIT;` to " +
             "each side first)") }
-      env(a) = Rel(() => prefixed
+      env(a) = Rel(() => inputs
         .reduceLeft[(DataFrame, Seq[Column], Option[Column])] {
           case ((l, lk, lw), (r, rk, rw)) =>
             val keyCond = lk.zip(rk).map { case (x, y) => x === y }
@@ -698,36 +673,25 @@ class PigCompiler(spark: SparkSession) {
         // WINDOW'd sides pair within the same window instance — an
         // equi-join on w_start, which Structured Streaming CAN run
         // (a true unbounded cross of streams is unexecutable anywhere)
-        val prefixed = dfs.map { case (in, df0) =>
-          require(df0.columns.contains("w_start"),
+        val inputs = dfs.map { case (in, df) =>
+          require(df.columns.contains("w_start"),
             "CROSS on streaming relations requires WINDOW'd inputs " +
               "(pairs form within a window, not across the unbounded " +
               "streams)")
-          val df = df0.withWatermark("w_start", "0 seconds")
-          val renamed = df.columns.foldLeft(df)((d, c) =>
-            d.withColumnRenamed(c, s"$in::$c"))
-          (renamed, renamed(s"$in::w_start"))
+          val (renamed, wStart) = windowPrefixed(in, df)
+          (renamed, wStart.get)
         }
-        env(a) = Rel(() => prefixed.reduceLeft[(DataFrame, Column)] {
+        env(a) = Rel(() => inputs.reduceLeft[(DataFrame, Column)] {
           case ((l, lw), (r, rw)) => (l.join(r, lw === rw), lw)
         }._1)
       } else
         env(a) = Rel(() => dfs.map(_._2).reduceLeft(_.crossJoin(_)))
 
     case Union(a, ins, onSchema) =>
-      // plain Pig UNION is POSITIONAL (same arity, the left relation's
-      // names win); ONSCHEMA aligns by name and null-pads
-      val dfs = ins.map(relation)
+      val pipes = ins.map(in => graft.core.Pipe(relation(in)))
       env(a) = Rel(() =>
-        if (onSchema) dfs
-          .reduceLeft(_.unionByName(_, allowMissingColumns = true))
-        else dfs.reduceLeft { (l, r) =>
-          require(l.columns.length == r.columns.length,
-            s"UNION arity mismatch: ${l.columns.length} vs " +
-              s"${r.columns.length} columns (use UNION ONSCHEMA to " +
-              "align by name)")
-          l.union(r.toDF(l.columns: _*))
-        })
+        if (onSchema) pipes.head.unionWith(pipes.tail: _*).df
+        else pipes.head.unionPositional(pipes.tail: _*).df)
 
     case DistinctStmt(a, in) =>
       val df = relation(in)
@@ -748,19 +712,12 @@ class PigCompiler(spark: SparkSession) {
       env(a) = Rel(() => df.sample(withReplacement = false, f, 42L))
 
     case SplitInto(in, branches) =>
-      val df = relation(in)
-      val conds = branches.collect { case (_, Some(c)) => c }
-      branches.foreach {
-        case (name, Some(cond)) =>
-          env(name) = Rel(() => df.filter(compileExpr(df, cond)))
-        case (name, None) =>
-          // OTHERWISE: rows matching none of the explicit branches
-          // (no explicit branches -> every row)
-          val none = conds.map(c => !compileExpr(df, c) ||
-            compileExpr(df, c).isNull)
-            .reduceOption(_ && _)
-            .getOrElse(org.apache.spark.sql.functions.lit(true))
-          env(name) = Rel(() => df.filter(none))
+      val p = graft.core.Pipe(relation(in))
+      val conds = branches.map { case (n, c) => (n, c.map(compileExpr(p.df, _))) }
+      val explicit = conds.flatMap(_._2)
+      conds.foreach {
+        case (name, Some(c)) => env(name) = Rel(() => p.splitInto(c).head.df)
+        case (name, None) => env(name) = Rel(() => p.splitOtherwise(explicit: _*).df)
       }
 
     case RankStmt(a, in, keys) =>
@@ -838,9 +795,9 @@ class PigCompiler(spark: SparkSession) {
           .rscript(code, outCols = nOut, global = true, binary = binary).df
       })
 
-    case Materialize(a) =>
-      val df = relation(a).cache()
-      env(a) = Rel(() => df)
+    // MATERIALIZE a: persist in this session, the same as `a = CACHE a;`
+    // (Pipe.materialize(path) is the API's parquet-writing form)
+    case Materialize(a) => exec(CacheStmt(a, a, None))
 
     case SetCmd(k, v) => spark.conf.set(k, v)
     case FsCmd(c, ps) =>
@@ -1156,12 +1113,8 @@ class PigCompiler(spark: SparkSession) {
       if (l == r) sys.error(
         s"SPATIAL_JOIN: both sides are '$l'; assign one side a new " +
         s"alias first (e.g. ${l}2 = FOREACH $l GENERATE *;)")
-      val ld0 = relation(l)
-      val rd0 = relation(r)
-      val ld = ld0.columns.foldLeft(ld0)((d, c) =>
-        d.withColumnRenamed(c, s"$l::$c"))
-      val rd = rd0.columns.foldLeft(rd0)((d, c) =>
-        d.withColumnRenamed(c, s"$r::$c"))
+      val ld = prefixed(l, relation(l))
+      val rd = prefixed(r, relation(r))
       def geomName(e: Expr, rel: String) = e match {
         case FieldRef(p) =>
           val n = p.mkString("::")
@@ -1796,7 +1749,8 @@ class PigCompiler(spark: SparkSession) {
           raw.select(fs.map(f => col(s"`${f.name}`")).toIndexedSeq: _*)
         else {
           val pad = Seq.fill(math.max(0, fs.length - raw.columns.length))(lit(null))
-          raw.select((raw.columns.take(fs.length).map(col) ++ pad).toIndexedSeq: _*)
+          raw.select((raw.columns.take(fs.length).map(c => col(s"`$c`")) ++ pad)
+            .toIndexedSeq: _*)
             .toDF(fs.map(_.name): _*)
         }
       named.select(fs.map { f =>

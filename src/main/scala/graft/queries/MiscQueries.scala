@@ -18,7 +18,7 @@ object MiscQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  private def deriveDir = "/root/repo/target/graft-data"
+  private def deriveDir = Tables.derivedDir
   /** Headerless csv for PigStorage LOAD coverage. */
   private def ensurePigCsv(s: SparkSession, dir: String): Unit = synchronized {
     // guard on the _SUCCESS marker, not the directory: a crash mid-write

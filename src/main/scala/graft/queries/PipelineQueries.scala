@@ -897,7 +897,7 @@ object PipelineQueries {
     //    Common Crawl ingest shape in one query. The WARC leg is
     //    byte-identity, so the q_html_extract oracle carries over. --------
     "q_wet_pipeline" -> ((s, dir) => {
-      val out = "/root/repo/target/graft-data/wet_docs"
+      val out = s"${Tables.derivedDir}/wet_docs"
       // size-derived segment ROLLOVER instead of a pre-write exchange:
       // the writer seals a segment at the cap, so the read side gets one
       // task per segment (the HTML-extraction regex pass — the dominant
@@ -1141,7 +1141,7 @@ object PipelineQueries {
     //    layout column gets file-level min/max skipping) is
     //    ZOrderLayoutSpec's measured assertion -----------------------------
     "q_store_zorder" -> ((s, dir) => {
-      val out = "/root/repo/target/graft-data/zorder_rt"
+      val out = s"${Tables.derivedDir}/zorder_rt"
       graft.core.Pipe(t(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("value")))
         .storeZOrdered(out, Seq("user_id", "value"), bits = 8)
@@ -1156,7 +1156,7 @@ object PipelineQueries {
     //    directly while the ENGINE still runs the full canon pass. ------
     "q_crawl_pipeline" -> ((s, dir) => {
       import s.implicits._
-      val out = "/root/repo/target/graft-data/crawl_docs"
+      val out = s"${Tables.derivedDir}/crawl_docs"
       // size-derived segment ROLLOVER instead of a pre-write exchange
       // (see q_wet_pipeline): one read task per sealed segment keeps the
       // link-extraction regex pass parallel — without any layout help it
@@ -1228,7 +1228,7 @@ object PipelineQueries {
     //    both straight from the table, so the write→scan→manifest chain
     //    is verified end-to-end -------------------------------------------
     "q_store_manifest" -> ((s, dir) => {
-      val out = "/root/repo/target/graft-data/manifest_rt"
+      val out = s"${Tables.derivedDir}/manifest_rt"
       val manifest = graft.core.Pipe(t(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("event_type")))
         .storeWithManifest(out, maxRecordsPerFile = 4096L)

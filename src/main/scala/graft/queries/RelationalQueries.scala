@@ -20,7 +20,7 @@ object RelationalQueries {
     Tables(s, dir, name)
 
   /** Derived csv/json copies of small tables, for LOAD-format coverage. */
-  private def deriveDir = "/root/repo/target/graft-data"
+  private def deriveDir = Tables.derivedDir
   private def ensureDerived(s: SparkSession, dir: String): Unit = synchronized {
     // guard each output independently: a crash between the two writes
     // must not wedge the missing one behind the existing one
@@ -190,10 +190,8 @@ object RelationalQueries {
         Seq(concat_ws(",", sort_array(collect_list(col("c_custkey")))).as("bag_str"))).df),
     // -- COGROUP (#10) ------------------------------------------------------------
     "q_cogroup" -> ((s, dir) => {
-      val c = Pipe(t(s, dir, "customer"))
-      val sup = Pipe(t(s, dir, "supplier"))
-      c.cogroupWith(sup, Seq(col("c_nationkey")), Seq(col("s_nationkey")),
-                    "cbag", "sbag")
+      Pipe.cogroup((Pipe(t(s, dir, "customer")), Seq(col("c_nationkey")), "cbag"),
+          (Pipe(t(s, dir, "supplier")), Seq(col("s_nationkey")), "sbag"))
         .generate(col("group").cast("int").as("nationkey"),
                   size(col("cbag")).cast("long").as("c_cnt"),
                   size(col("sbag")).cast("long").as("s_cnt")).df

@@ -10,9 +10,11 @@ import graft.SparkEntry
 import graft.core.{GraftSession, Intermediates}
 
 /** Per-query diagnostics. Runs each named SparkEntry query (bench-only
-  * variants included) twice, cold then warm, so first-run JIT, codegen
-  * and state-store-init cost is separable from the steady-state profile,
-  * and prints
+  * variants included) twice: every listed query cold, in list order, then
+  * every one warm, in the same order. First-run JIT, codegen and
+  * state-store-init cost is thus separable from the steady-state profile,
+  * and each warm run follows the same JVM state (all the cold runs), not
+  * whichever rows happen to precede it in the list. It prints
   *  - `[job]` for every Spark job: id, stages, call site;
   *  - `[stage]` for every completed stage: tasks, wall, executor run and
   *    CPU time, deserialization, GC;
@@ -102,31 +104,29 @@ object Probe {
     sampler.setDaemon(true)
     sampler.start()
     val all = SparkEntry.queries ++ SparkEntry.benchOnly
-    for (name <- names) all.get(name) match {
-      case None => println(s"[probe] $name UNKNOWN")
-      case Some(fn) =>
-        for (run <- Seq("cold", "warm")) {
-          println(s"[probe] ===== $name ($run) =====")
-          try {
-            val t0 = System.nanoTime()
-            val qe = fn(spark, dir).queryExecution
-            val t1 = System.nanoTime()
-            val n = qe.toRdd.count()
-            val t2 = System.nanoTime()
-            println(f"[probe] $name ($run) rows=$n " +
-              f"build=${(t1 - t0) / 1e9}%.2f s exec=${(t2 - t1) / 1e9}%.2f s")
-            if (run == "warm") planDir.foreach { d =>
-              val out = d.resolve(s"$name.txt")
-              Files.writeString(out, qe.explainString(FormattedMode))
-              println(s"[probe] wrote $out")
-            }
-          } catch { case NonFatal(e) =>
-            println(s"[probe] $name ($run) FAILED: ${e.getMessage}")
-          } finally {
-            Intermediates.release()
-            spark.sqlContext.clearCache()
-          }
+    names.filterNot(all.contains).foreach(n => println(s"[probe] $n UNKNOWN"))
+    val known = names.filter(all.contains)
+    for (run <- Seq("cold", "warm"); name <- known) {
+      println(s"[probe] ===== $name ($run) =====")
+      try {
+        val t0 = System.nanoTime()
+        val qe = all(name)(spark, dir).queryExecution
+        val t1 = System.nanoTime()
+        val n = qe.toRdd.count()
+        val t2 = System.nanoTime()
+        println(f"[probe] $name ($run) rows=$n " +
+          f"build=${(t1 - t0) / 1e9}%.2f s exec=${(t2 - t1) / 1e9}%.2f s")
+        if (run == "warm") planDir.foreach { d =>
+          val out = d.resolve(s"$name.txt")
+          Files.writeString(out, qe.explainString(FormattedMode))
+          println(s"[probe] wrote $out")
         }
+      } catch { case NonFatal(e) =>
+        println(s"[probe] $name ($run) FAILED: ${e.getMessage}")
+      } finally {
+        Intermediates.release()
+        spark.sqlContext.clearCache()
+      }
     }
     spark.stop()
   }

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.Pipe
 import graft.piglatin.PigScript
+import DialectPipeTwinSpec.assertSameRows
 
 /** Regressions for the round-5 core/piglatin review findings. */
 class FrontEndFix5Spec extends SparkSpec {
@@ -36,6 +38,10 @@ class FrontEndFix5Spec extends SparkSpec {
       .collect().map(row => (row.getInt(0), row.getLong(1), row.getLong(2)))
     // key 1 only in a (cb must be 0, not null/-1), key 3 only in b
     assert(out.toSet == Set((1, 1L, 0L), (2, 1L, 1L), (3, 0L, 1L)))
+    assertSameRows(
+      PigScript.query(spark, "c = COGROUP a BY k, b BY k;", "c",
+        tables = Map("a" -> l, "b" -> r)),
+      Pipe.cogroup((Pipe(l), Seq(col("k")), "a"), (Pipe(r), Seq(col("k")), "b")).df)
   }
 
   test("RANK without BY is 1-based like Pig; ZIP WITH INDEX stays 0-based") {

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.Pipe
 import graft.piglatin.{PigParser, PigScript}
+import DialectPipeTwinSpec.assertSameRows
 
 /** Regressions for the round-4 front-end review findings. */
 class FrontEndFixSpec extends SparkSpec {
@@ -85,6 +87,7 @@ class FrontEndFixSpec extends SparkSpec {
     val c = PigScript.run(spark, "SPLIT a INTO b OTHERWISE;",
       tables = Map("a" -> df))
     assert(c.relation("b").count() == 2)
+    assertSameRows(c.relation("b"), Pipe(df).splitOtherwise().df)
   }
 
   test("plain UNION is positional; ONSCHEMA aligns by name") {
@@ -94,10 +97,12 @@ class FrontEndFixSpec extends SparkSpec {
       tables = Map("a" -> a, "b" -> b))
     assert(pos.columns.toSeq == Seq("x", "y"))
     assert(pos.as[(Int, String)].collect().toSet == Set((1, "p"), (2, "q")))
+    assertSameRows(pos, Pipe(a).unionPositional(Pipe(b)).df)
     val on = PigScript.query(spark, "c = UNION ONSCHEMA a, b;", "c",
       tables = Map("a" -> a, "b" -> b))
     assert(on.columns.toSet == Set("x", "y", "p", "q"))
     assert(on.count() == 2)
+    assertSameRows(on, Pipe(a).unionWith(Pipe(b)).df)
     // arity mismatch without ONSCHEMA is a clear error
     val bad = Seq((1, 2, 3)).toDF("p", "q", "r")
     val err = intercept[RuntimeException] {
@@ -105,6 +110,10 @@ class FrontEndFixSpec extends SparkSpec {
         tables = Map("a" -> a, "b" -> bad)).collect()
     }
     assert(err.getMessage.contains("arity"))
+    val apiErr = intercept[IllegalArgumentException] {
+      Pipe(a).unionPositional(Pipe(bad))
+    }
+    assert(apiErr.getMessage == err.getMessage)
   }
 
   test("MATCHES accepts a column-valued pattern") {

@@ -6,7 +6,7 @@ import graft.core.Pipe
 class ManifestSpec extends SparkSpec {
   import spark.implicits._
 
-  private val base = "/root/repo/target/graft-data/manifest_spec"
+  private val base = s"${graft.core.Tables.derivedDir}/manifest_spec"
 
   private def data = spark.range(5000)
     .select(col("id"), (col("id") % 37).as("k"),

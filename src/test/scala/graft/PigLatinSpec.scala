@@ -490,6 +490,18 @@ class PigLatinSpec extends SparkSpec {
     assert(rewritten.orderBy("id").as[(Long, String, Long)].collect().toSeq ==
       Seq((1L, "w1", 2L), (2L, "w2", 4L), (3L, "w3", 6L)))
   }
+
+  test("ParquetStorage LOAD ... AS binds a dotted source column by position") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pigdotted")
+    val path = s"$dir/t.parquet"
+    Seq((1L, "x"), (2L, "y")).toDF("id", "a.b").write.parquet(path)
+    val out = PigScript.query(spark,
+      s"a = LOAD '$path' USING ParquetStorage() AS (id:long, name:chararray);",
+      "a")
+    assert(out.columns.toSeq == Seq("id", "name"))
+    assert(out.orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "x"), (2L, "y")))
+  }
 }
 
 class RdfSpec extends SparkSpec {

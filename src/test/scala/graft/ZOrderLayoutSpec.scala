@@ -10,7 +10,7 @@ import graft.core.Pipe
 class ZOrderLayoutSpec extends SparkSpec {
   import spark.implicits._
 
-  private val base = "/root/repo/target/graft-data/zorder_spec"
+  private val base = s"${graft.core.Tables.derivedDir}/zorder_spec"
 
   // 40k rows on a 200×200 grid, row-major order (so a naive write is
   // already x-clustered and y-scattered — the hostile case for y)
