@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import graft.functions.GraftExtensions
 import graft.streaming.NioCheckpointFileManager
 
 /** The one graft session builder. Every main and the test suite start
@@ -14,7 +15,10 @@ import graft.streaming.NioCheckpointFileManager
   *    schemes delegate to the stock Hadoop manager (see the class doc);
   *  - AQE may re-plan INSIDE cached plans: persisted intermediates
   *    otherwise pin tiny tables at the full shuffle-partition count, and
-  *    every later pass re-schedules those near-empty tasks.
+  *    every later pass re-schedules those near-empty tasks;
+  *  - [[GraftExtensions]] is installed once, here: the `graft_cosine`
+  *    SQL function, and the rule + strategy that plan `Pipe.topPerGroup`
+  *    as the partial/final top-k operator.
   */
 object GraftSession {
   /** `SPARK_GRAFT_CPUS`, default 4: the local cores of every graft main. */
@@ -24,6 +28,7 @@ object GraftSession {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")

@@ -39,22 +39,6 @@ final case class Pipe(df: DataFrame) {
   def sampleRows(fraction: Double, seed: Long = 42L): Pipe =
     Pipe(df.sample(withReplacement = false, fraction, seed))
 
-  /** DELAY (reference: op/Delay.scala + codegen/spark/DelayEmitter):
-    * pass `samplePct`% of rows and hold each partition `waitMs` before
-    * processing — a stream-rate simulation / profiling aid. The sleep
-    * runs ON EXECUTORS once per partition (the reference's mapPartitions
-    * emission), never on the driver. */
-  def delay(waitMs: Long, samplePct: Int): Pipe = {
-    val sampled =
-      if (samplePct >= 100) df
-      else df.sample(withReplacement = false, samplePct / 100.0, 42L)
-    if (waitMs <= 0) Pipe(sampled)
-    else {
-      val enc = org.apache.spark.sql.Encoders.row(sampled.schema)
-      Pipe(sampled.mapPartitions { it => Thread.sleep(waitMs); it }(enc))
-    }
-  }
-
   /** Deterministic sample: keep rows whose md5-derived bucket (0–99) of
     * the key columns falls under `percent`. Engine-independent (md5 of
     * the same key string buckets identically everywhere — unlike seeded
@@ -92,11 +76,11 @@ final case class Pipe(df: DataFrame) {
     * chosen rows reproduce across engines, retries and repartitionings,
     * and stay STABLE under corpus growth (a kept row is only ever
     * displaced by a new row hashing ahead of it, never by reshuffling).
-    * Rides the partial top-k operator: map-side bounded heaps prune to
-    * ≤ k rows per group per partition BEFORE the exchange — at 100 TB
+    * A [[topPerGroup]]: in a graft session map-side bounded heaps prune
+    * to ≤ k rows per group per partition BEFORE the exchange — at 100 TB
     * the shuffle carries ≤ k·partitions rows per group, not the group. */
   def quotaSampleByHash(group: Column, k: Int, keys: Column*): Pipe =
-    topPerGroupPartial(k, Seq(group),
+    topPerGroup(k, Seq(group),
       Seq(Pipe.hashOrderKey(keys).asc, Pipe.hashKeyEncoding(keys).asc))
 
   /** Mixture sampling toward a TARGET composition (the pre-training
@@ -214,9 +198,9 @@ final case class Pipe(df: DataFrame) {
     * cross-engine determinism.
     * Shape: one exchange on the group key + per-partition sort (the
     * q_rank window shape); count rides the same window, so the corpus
-    * is scanned once. For small pct over huge groups the bounded-heap
-    * [[topPerGroupPartial]] with a precomputed per-group k is the
-    * cheaper path — this is the exact, oracle-replayable default. */
+    * is scanned once. The per-group k is data-dependent, so this shape
+    * is not [[topPerGroup]]'s bounded-heap operator (which needs one
+    * literal k); it is the exact, oracle-replayable default. */
   def topFracByGroup(group: Column, pct: Int, score: Column,
                      tieKeys: Column*): Pipe = {
     require(pct >= 1 && pct <= 100,
@@ -479,20 +463,19 @@ final case class Pipe(df: DataFrame) {
     * TakeOrderedAndProject — per-partition top-n, then merge; no total sort. */
   def top(n: Int, ordering: Column*): Pipe = Pipe(df.orderBy(ordering: _*).limit(n))
 
-  /** Top-n per group via ranked window (shuffle on the group key only). */
+  /** Top-n rows per group, written as the standard window idiom
+    * (`row_number() ≤ n`, rank dropped). In a [[GraftSession]] the
+    * optimizer plans it as graft's partial/final operator
+    * ([[graft.plans.TopKPerGroup]]): map-side bounded heaps prune to ≤ n
+    * rows per group per partition BEFORE the exchange, where a window
+    * would shuffle every row. Any other session plans Spark's window
+    * with the same rows. Ties past the n-th are broken arbitrarily, so
+    * pass a totalizing `ordering` for a deterministic result. */
   def topPerGroup(n: Int, groupKeys: Seq[Column], ordering: Seq[Column]): Pipe = {
     val w = Window.partitionBy(groupKeys: _*).orderBy(ordering: _*)
     Pipe(df.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= n)
            .drop("__rn"))
   }
-
-  /** Top-n per group through graft's custom partial/final operator
-    * ([[graft.plans.TopK]]): map-side bounded heaps prune to ≤ n rows per
-    * group per partition BEFORE the exchange — the window formulation
-    * shuffles every row. Prefer this on large fact tables with small n. */
-  def topPerGroupPartial(n: Int, groupKeys: Seq[Column],
-                         ordering: Seq[Column]): Pipe =
-    Pipe(graft.plans.TopK.topKPerGroup(df, groupKeys, ordering, n))
 
   /** Skyline: the Pareto-optimal set over `dims` — row p survives unless
     * some row q is at-least-as-good on EVERY dim and strictly better on
@@ -502,13 +485,13 @@ final case class Pipe(df: DataFrame) {
     * Dims minimize by default; name a dim in `maximize` to flip it. Rows
     * with a null dim never dominate and never survive.
     *
-    * Distributed two-phase, same shape as the custom TopK operator: a
-    * per-partition LOCAL skyline first (a locally-dominated row cannot be
-    * in the global skyline — dominance is transitive), then a final pass
-    * over the union of local skylines on one partition. At scale the
-    * local phase prunes each partition to ~skyline-cardinality rows
-    * (polylog n for independent dims), so the single-partition merge sees
-    * sum-of-local-skylines, not n. */
+    * Distributed two-phase, the same shape as [[topPerGroup]]'s
+    * partial/final operator: a per-partition LOCAL skyline first (a
+    * locally-dominated row cannot be in the global skyline — dominance
+    * is transitive), then a final pass over the union of local skylines
+    * on one partition. At scale the local phase prunes each partition to
+    * ~skyline-cardinality rows (polylog n for independent dims), so the
+    * single-partition merge sees sum-of-local-skylines, not n. */
   def skyline(dims: Seq[String], maximize: Set[String] = Set.empty): Pipe = {
     val idx = dims.map { d =>
       val i = df.columns.indexOf(d)
@@ -784,7 +767,9 @@ final case class Pipe(df: DataFrame) {
 
   /** reference: op/Delay.scala (`DELAY a 10% 2 seconds`) — testing/demo
     * aid: pass `sampleFactor` (0..1) of the rows through, sleeping
-    * `waitMs` once per partition. Kept off any production path. */
+    * `waitMs` once per partition ON EXECUTORS (the reference's
+    * mapPartitions emission), never on the driver. The dialect's DELAY
+    * runs here too. Kept off any production path. */
   def delay(sampleFactor: Double, waitMs: Long, seed: Long = 42L): Pipe = {
     val sampled =
       if (sampleFactor >= 1.0) df

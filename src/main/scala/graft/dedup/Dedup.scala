@@ -352,7 +352,7 @@ object Dedup {
       .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        graft.functions.GraftFunctions.cosine(df.sparkSession,
+        graft.functions.GraftFunctions.cosine(
           col("v_a"), col("v_b")).as("cosine"))
       .where(col("cosine") >= threshold)
   }
@@ -394,7 +394,7 @@ object Dedup {
         col("l.cell") === col("r.cell") && col("l.id") < col("r.id"))
       .select(col("l.cell").as("cell"),
         col("l.id").as("id_a"), col("r.id").as("id_b"),
-        graft.functions.GraftFunctions.cosine(df.sparkSession,
+        graft.functions.GraftFunctions.cosine(
           col("l.v"), col("r.v")).as("cosine"))
       .where(col("cosine") >= threshold)
   }

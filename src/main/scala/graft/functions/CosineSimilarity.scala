@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
@@ -106,30 +106,16 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for graft's native expressions: per-session (register) or
-  * cluster-wide via spark.sql.extensions=graft.functions.GraftExtensions. */
+/** Column API for the native expression. */
 object GraftFunctions {
-  private val cosineId = FunctionIdentifier("graft_cosine")
-  private val cosineInfo = new ExpressionInfo(
-    classOf[CosineSimilarity].getName, "graft_cosine")
-  private val cosineBuilder: Seq[Expression] => Expression =
-    exprs => CosineSimilarity(exprs(0), exprs(1))
-
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(cosineId)) {
-      spark.sessionState.functionRegistry
-        .registerFunction(cosineId, cosineInfo, cosineBuilder)
-    }
-
-  /** Column API for the native expression (registers lazily). */
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_cosine", a, b)
-  }
+  def cosine(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 }
 
-/** `spark.sql.extensions` entry point: native functions + the window
-  * top-k → partial/final rewrite + its planning strategy. */
+/** graft's session extensions, installed by [[graft.core.GraftSession]]
+  * (or cluster-wide via spark.sql.extensions): `graft_cosine` for SQL
+  * text, and the window top-k → partial/final rewrite with its planning
+  * strategy. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((

@@ -48,8 +48,7 @@ object KMeans {
                    centroids: Seq[Array[Double]]): DataFrame = {
     val v = col(vecCol).cast(ArrayType(DoubleType))
     val assigned = df.withColumn("cluster", assignTo(v, centroids))
-    val sess = df.sparkSession
-    val cosToCentroid = graft.functions.GraftFunctions.cosine(sess,
+    val cosToCentroid = graft.functions.GraftFunctions.cosine(
       v, element_at(array(centroids.map(c => lit(c)): _*),
         col("cluster") + 1))
     assigned

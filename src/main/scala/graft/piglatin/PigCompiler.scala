@@ -684,8 +684,10 @@ class PigCompiler(spark: SparkSession) {
         env(a) = Rel(() => inputs.reduceLeft[(DataFrame, Column)] {
           case ((l, lw), (r, rw)) => (l.join(r, lw === rw), lw)
         }._1)
-      } else
-        env(a) = Rel(() => dfs.map(_._2).reduceLeft(_.crossJoin(_)))
+      } else {
+        val inputs = dfs.map { case (in, df) => prefixed(in, df) }
+        env(a) = Rel(() => inputs.reduceLeft(_.crossJoin(_)))
+      }
 
     case Union(a, ins, onSchema) =>
       val pipes = ins.map(in => graft.core.Pipe(relation(in)))
@@ -1190,7 +1192,7 @@ class PigCompiler(spark: SparkSession) {
 
     case DelayStmt(a, in, waitMs, pct) =>
       val df = relation(in)
-      env(a) = Rel(() => graft.core.Pipe(df).delay(waitMs, pct).df)
+      env(a) = Rel(() => graft.core.Pipe(df).delay(pct / 100.0, waitMs).df)
 
     case SkylineStmt(a, in, dims) =>
       val df = relation(in)

@@ -12,7 +12,7 @@ object PigletReference {
   def apply(rel: String): String = {
     if (!new java.io.File(Root).isDirectory)
       throw new IllegalStateException(
-        s"piglet reference checkout not found at $Root; see ROADMAP item 5")
+        s"piglet reference checkout not found at $Root; see ROADMAP item 10")
     s"$Root/$rel"
   }
 }

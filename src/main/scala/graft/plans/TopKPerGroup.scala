@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -27,6 +25,10 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * fact table with small k this is the difference between shuffling the
   * table and shuffling a rounding error. The same partial/final split
   * Spark applies to aggregates, applied to order statistics.
+  *
+  * The optimizer is the only way in: [[TopKRewriteRule]] builds this node
+  * from the window idiom (`Pipe.topPerGroup`), and [[TopKStrategy]]
+  * plans it; [[graft.functions.GraftExtensions]] installs both.
   */
 final case class TopKPerGroup(groupExprs: Seq[Expression],
                               order: Seq[SortOrder], k: Int,
@@ -113,45 +115,5 @@ object TopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
       TopKFinalExec(g, o, k,
         TopKPartialExec(g, o, k, planLater(child))) :: Nil
     case _ => Nil
-  }
-}
-
-object TopK {
-  /** Register the strategy once per session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies = strategies :+ TopKStrategy
-  }
-
-  /** Top-k rows per group, planned through the custom operator. */
-  def topKPerGroup(df: DataFrame, groupCols: Seq[Column],
-                   orderCols: Seq[Column], k: Int): DataFrame = {
-    // k = 0 would reach boundedTopK's heap with an always-false size
-    // guard and die executor-side on heap.head of an empty queue
-    require(k > 0, s"topKPerGroup requires k > 0, got $k")
-    register(df.sparkSession)
-    // float/double group keys: 0.0 and -0.0 have distinct bit patterns,
-    // so raw UnsafeProjection keys (and the hash distribution) would
-    // split them into two groups where SQL grouping — which runs
-    // NormalizeFloatingNumbers on aggregate/window keys — yields one.
-    // `+ 0.0` collapses -0.0 to 0.0 without touching other values.
-    val normalized = groupCols.map { c =>
-      import org.apache.spark.sql.functions.lit
-      // resolve the column's type against df (the raw expression may be
-      // an UnresolvedAttribute whose dataType throws)
-      df.select(c).schema.head.dataType match {
-        case org.apache.spark.sql.types.DoubleType => c + lit(0.0)
-        case org.apache.spark.sql.types.FloatType => c + lit(0.0f)
-        case _ => c
-      }
-    }
-    val g = normalized.map(GraftColumnBridge.catalystExpression)
-    val o = orderCols.map(GraftColumnBridge.catalystExpression).map {
-      case so: SortOrder => so
-      case e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending)
-    }
-    GraftColumnBridge.ofRows(df.sparkSession,
-      TopKPerGroup(g, o, k, GraftColumnBridge.logicalPlan(df)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftColumnBridge.normalizeFloats
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -17,6 +17,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * attribute is exactly the row_number output, the bound is a literal,
   * and the projection does not keep the rank column (rank values are not
   * reproduced by the heap operator).
+  *
+  * Float/double group keys are normalized here: 0.0 and -0.0 (and the
+  * NaN bit patterns) differ as raw key bytes, so the heap keys and the
+  * hash distribution would split what SQL grouping treats as one group.
+  * Spark's own NormalizeFloatingNumbers runs in a later batch than this
+  * rule and does not know the new operator.
   */
 object TopKRewriteRule extends Rule[LogicalPlan] {
 
@@ -48,16 +54,7 @@ object TopKRewriteRule extends Rule[LogicalPlan] {
           al.exprId == rnAttr.exprId &&          // filter bounds THIS rank
           !projectList.exists(_.references.contains(rnAttr)) &&
           projectList.forall(_.references.subsetOf(child.outputSet)) =>
-      Project(projectList, TopKPerGroup(partitionSpec, orderSpec, k, child))
-  }
-}
-
-object TopKRewrite {
-  /** Register the rewrite + strategy (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    TopK.register(spark)
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(TopKRewriteRule))
-      spark.experimental.extraOptimizations = opts :+ TopKRewriteRule
+      Project(projectList,
+        TopKPerGroup(partitionSpec.map(normalizeFloats), orderSpec, k, child))
   }
 }

@@ -310,10 +310,10 @@ object RelationalQueries {
         .top(10, col("o_totalprice").desc, col("o_orderkey"))
         .generate(col("o_orderkey"), col("o_totalprice")).df),
     "q_top_per_group_partial" -> ((s, dir) =>
-      // same semantics as q_top_per_group, planned through the custom
-      // partial/final TopK operator — the oracle validates the operator
+      // a twin of q_top_per_group, kept so the row set stays fixed: both
+      // plan as graft's partial/final top-k operator in a graft session
       Pipe(t(s, dir, "orders"))
-        .topPerGroupPartial(3, Seq(col("o_orderpriority")),
+        .topPerGroup(3, Seq(col("o_orderpriority")),
                      Seq(col("o_totalprice").desc, col("o_orderkey")))
         .generate(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice")).df),
     "q_top_per_group" -> ((s, dir) =>

@@ -78,7 +78,7 @@ object Similarity {
       col(vecCol).cast(ArrayType(DoubleType)).as("qv"))
     val scored = c.crossJoin(broadcast(q))
       .select(col("qid"), col("id"),
-        graft.functions.GraftFunctions.cosine(corpus.sparkSession,
+        graft.functions.GraftFunctions.cosine(
           col("cv"), col("qv")).as("cosine"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cosine").desc, col("id"))
@@ -116,7 +116,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(a))
       .where(col("__clab") =!= col("__alab"))
       .select(col("qid"), col("id"),
-        graft.functions.GraftFunctions.cosine(corpus.sparkSession,
+        graft.functions.GraftFunctions.cosine(
           col("cv"), col("qv")).as("cosine"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cosine").desc, col("id"))
@@ -258,7 +258,7 @@ object Similarity {
     // would funnel the whole corpus into ≤ nCells reducers
     val scored = assigned.join(broadcast(probed), Seq("cell"))
       .select(col("qid"), col("id"),
-        graft.functions.GraftFunctions.cosine(corpus.sparkSession,
+        graft.functions.GraftFunctions.cosine(
           col("cv"), col("qv")).as("cosine"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cosine").desc, col("id"))
@@ -350,7 +350,7 @@ object Similarity {
       col(vecCol).cast(ArrayType(DoubleType)).as("qv"))
     val scored = cands.join(cvv, Seq("id")).join(broadcast(qvv), Seq("qid"))
       .select(col("qid"), col("id"),
-        graft.functions.GraftFunctions.cosine(corpus.sparkSession,
+        graft.functions.GraftFunctions.cosine(
           col("cv"), col("qv")).as("cosine"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cosine").desc, col("id"))

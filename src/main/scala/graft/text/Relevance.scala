@@ -58,9 +58,10 @@ object Relevance {
 
   /** Top-k salient terms per document by standard double tf·ln(N/df)
     * (ties → term asc). Library API; for a hash-exact cross-engine
-    * oracle use [[tfIdfTopKExact]] (see object scaladoc). Pruning runs
-    * through the partial/final TopK operator — map-side heaps bound the
-    * exchange to ≤ k rows per doc per partition. */
+    * oracle use [[tfIdfTopKExact]] (see object scaladoc). Pruning is a
+    * `Pipe.topPerGroup`: in a graft session the partial/final top-k
+    * operator's map-side heaps bound the exchange to ≤ k rows per doc
+    * per partition. */
   def tfIdfTopK(docs: DataFrame, idCol: String, textCol: String,
                 k: Int): DataFrame = {
     val tf = termFreqs(docs, idCol, textCol)
@@ -70,8 +71,8 @@ object Relevance {
         col("tf").cast(DoubleType) *
           log(col("__n").cast(DoubleType) / col("df").cast(DoubleType)))
       .drop("__n")
-    graft.plans.TopK.topKPerGroup(scored, Seq(col(idCol)),
-      Seq(col("tfidf").desc, col("term").asc), k)
+    graft.core.Pipe(scored).topPerGroup(k, Seq(col(idCol)),
+      Seq(col("tfidf").desc, col("term").asc)).df
   }
 
   /** Top-k salient terms per document by the integer score tf·intIdf —
@@ -87,8 +88,8 @@ object Relevance {
       .withColumn("score",
         (col("tf") * intIdf(col("__n"), col("df"))).cast(LongType))
       .drop("__n")
-    val top = graft.plans.TopK.topKPerGroup(scored, Seq(col(idCol)),
-      Seq(col("score").desc, col("term").asc), k)
+    val top = graft.core.Pipe(scored).topPerGroup(k, Seq(col(idCol)),
+      Seq(col("score").desc, col("term").asc)).df
     top.withColumn("rnk",
         row_number().over(Window.partitionBy(col(idCol))
           .orderBy(col("score").desc, col("term").asc)).cast(LongType))

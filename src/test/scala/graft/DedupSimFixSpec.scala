@@ -65,7 +65,7 @@ class DedupSimFixSpec extends SparkSpec {
       org.apache.spark.sql.Row(Seq(0.9, null, 0.4), Seq(0.9, 1.0, 0.4)))
     val df = spark.createDataFrame(rows, schema)
     val got = df.select(graft.functions.GraftFunctions
-        .cosine(spark, col("a"), col("b")).as("c"))
+        .cosine(col("a"), col("b")).as("c"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
     assert(got(0).exists(v => math.abs(v - 1.0) < 1e-12))
     assert(got(1).isEmpty)

@@ -87,12 +87,13 @@ class DialectPipeTwinSpec extends SparkSpec {
   }
 
   test("CROSS matches crossWith") {
-    // batch CROSS keeps the inputs' names, so the sides share none here
-    val d = b.toDF("bk", "bv")
-    assertSameRows(
-      PigScript.query(spark, "x = CROSS a, d;", "x",
-        tables = Map("a" -> a, "d" -> d)),
-      Pipe(a).crossWith(Pipe(d)).df)
+    // both inputs have a column k: Pig names them a::k and b::k
+    val x = PigScript.run(spark, "x = CROSS a, b; y = FOREACH x GENERATE " +
+      "a::k AS ak, b::k AS bk;", tables = tables)
+    val cross = x.relation("x")
+    assert(cross.columns.toSeq == Seq("a::k", "a::a.b", "a::v", "b::k", "b::bv"))
+    assertSameRows(cross, prefixed("a", a).crossWith(prefixed("b", b)).df)
+    assert(x.relation("y").count() == a.count() * b.count())
   }
 
   test("registry twins q_pig_nested and q_nested_foreach return the same rows") {

@@ -1,6 +1,7 @@
 package graft
 
-import graft.core.GraftSession
+import org.apache.spark.sql.functions.col
+import graft.core.{GraftSession, Pipe}
 import graft.streaming.NioCheckpointFileManager
 
 /** `GraftSession` is the only session builder, so its confs are graft's
@@ -35,5 +36,19 @@ class GraftSessionSpec extends SparkSpec {
       // GraftSession logs at WARN; keep the suite at SparkSpec's ERROR
       spark.sparkContext.setLogLevel("ERROR")
     }
+  }
+
+  test("GraftSession installs GraftExtensions: the top-k rule and strategy") {
+    val df = Pipe(spark.range(0, 20).toDF("id").withColumn("g", col("id") % 3))
+      .topPerGroup(2, Seq(col("g")), Seq(col("id").desc)).df
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKPartial"), plan)
+    assert(df.count() == 6)
+  }
+
+  test("GraftSession installs GraftExtensions: graft_cosine in SQL text") {
+    val got = spark.sql(
+      "SELECT graft_cosine(array(1D, 0D), array(1D, 0D))").head().getDouble(0)
+    assert(got == 1.0)
   }
 }

@@ -39,7 +39,6 @@ class MiscFixSpec extends SparkSpec {
   }
 
   test("an always-false rank filter is NOT rewritten into top-everything") {
-    graft.plans.TopKRewrite.register(spark)
     val df = Seq((1, 10), (1, 20), (2, 30)).toDF("g", "v")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("g").orderBy("v")
@@ -48,11 +47,14 @@ class MiscFixSpec extends SparkSpec {
     assert(out.count() == 0) // k-1 wrapping to Int.MaxValue returned 3
   }
 
-  test("topKPerGroup groups 0.0 and -0.0 together like SQL semantics") {
+  test("topPerGroup groups 0.0 and -0.0 together like SQL semantics") {
     val df = Seq((0.0, 1), (-0.0, 2), (1.0, 3)).toDF("g", "v")
-    val out = graft.plans.TopK.topKPerGroup(df, Seq(col("g")),
-      Seq(col("v")), k = 1)
-    // one winner for the merged 0.0 group, one for 1.0
+    val out = graft.core.Pipe(df).topPerGroup(1, Seq(col("g")),
+      Seq(col("v"))).df
+    // the rewrite normalizes the key: one winner for the merged 0.0
+    // group, one for 1.0
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKPartial"), plan)
     assert(out.count() == 2)
     assert(out.select("v").as[Int].collect().toSet == Set(1, 3))
   }

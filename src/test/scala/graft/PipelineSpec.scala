@@ -221,7 +221,7 @@ class SimilaritySpec extends SparkSpec {
       reverse(col("embedding").cast("array<double>")).as("w"))
     val both = df.select(
       Similarity.cosine(col("v"), col("w")).as("hof"),
-      graft.functions.GraftFunctions.cosine(spark, col("v"), col("w")).as("nat"))
+      graft.functions.GraftFunctions.cosine(col("v"), col("w")).as("nat"))
     assert(both.where(col("hof") =!= col("nat")).count() == 0)
   }
 

@@ -33,7 +33,7 @@ class RobustnessFixSpec extends SparkSpec {
   test("native cosine fails loudly on dimension mismatch") {
     val df = Seq((Seq(1.0, 2.0), Seq(1.0, 2.0, 3.0))).toDF("a", "b")
     val err = intercept[Exception] {
-      df.select(graft.functions.GraftFunctions.cosine(spark,
+      df.select(graft.functions.GraftFunctions.cosine(
         col("a"), col("b"))).collect()
     }
     assert(err.getMessage != null)

@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   // overridable so plan-shape suites (PlanAuditSpec) can re-assert
-  // against scaled data (ScaleBench's target/scale10) — "no plan flips
-  // at 10× data" is part of the scale-stress evidence
+  // against a larger scale factor — "no plan flips at 10× data"
   def sfDir = sys.env.getOrElse("SPARK_GRAFT_TEST_SF_DIR",
     "/root/testdata/sf0.001")
 

@@ -1,18 +1,25 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.TopK
+import graft.core.Pipe
 
-/** Differential testing for the custom TopKPerGroup physical operator:
-  * seeded random data with null group keys, null and duplicate order
-  * values, asc/desc and multi-column orderings, k at and beyond group
-  * size — compared against the row_number window formulation (Spark's
-  * own engine) on the SAME SortOrder. Ties beyond the k-th are broken by
-  * a unique trailing order column, so the expected set is deterministic. */
+/** Differential testing for the custom TopKPerGroup physical operator,
+  * reached through `Pipe.topPerGroup`: seeded random data with null group
+  * keys, null and duplicate order values, asc/desc and multi-column
+  * orderings, k at and beyond group size — compared against a plain-Scala
+  * sort per group (asc NULLS FIRST, desc NULLS LAST, Spark's defaults).
+  * A rank-dropping window "model" would itself plan as the operator, so
+  * the model stays out of Spark. Ties beyond the k-th are broken by a
+  * unique trailing order column, so the expected set is deterministic. */
 class TopKDifferentialSpec extends SparkSpec {
   import spark.implicits._
 
-  test("TopKPerGroup equals the window row_number model on random data") {
+  private def assertOperator(df: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKPartial"), plan)
+  }
+
+  test("TopKPerGroup equals a per-group sort model on random data") {
     val keys = Vector("a", "b", "c", "d", null)
     for (seed <- 1 to 5) {
       val rnd = new scala.util.Random(700 + seed)
@@ -25,15 +32,18 @@ class TopKDifferentialSpec extends SparkSpec {
       val desc = seed % 2 == 0
       val vOrd = if (desc) col("v").desc else col("v").asc
       // unique trailing id makes the top-k SET deterministic under ties
-      val order = Seq(vOrd, col("id").asc)
+      val top = Pipe(df).topPerGroup(k, Seq(col("grp")), Seq(vOrd, col("id").asc)).df
+      assertOperator(top)
+      val got = top.select("id").as[Long].collect().toSet
 
-      val got = TopK.topKPerGroup(df, Seq(col("grp")), order, k)
-        .select("id").as[Long].collect().toSet
-      val model = df.withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("grp")).orderBy(order: _*)))
-        .where(col("__rn") <= k)
-        .select("id").as[Long].collect().toSet
+      // (null rank, value) so nulls sort first ascending, last descending
+      def vKey(v: Option[Double]) = v match {
+        case None => (if (desc) 1 else 0, 0.0)
+        case Some(x) => (if (desc) 0 else 1, if (desc) -x else x)
+      }
+      val model = rows.groupBy(_._2).values.flatMap { g =>
+        g.sortBy { case (id, _, v) => (vKey(v), id) }.take(k).map(_._1)
+      }.toSet
       assert(got == model, s"seed=$seed k=$k desc=$desc " +
         s"missing=${(model -- got).take(4)} extra=${(got -- model).take(4)}")
     }
@@ -42,9 +52,9 @@ class TopKDifferentialSpec extends SparkSpec {
   test("TopKPerGroup with k larger than every group returns all rows") {
     val df = (1 to 40).map(i => (i.toLong, s"g${i % 4}"))
       .toDF("id", "grp").repartition(3)
-    val got = TopK.topKPerGroup(df, Seq(col("grp")),
-      Seq(col("id").asc), k = 100).count()
-    assert(got == 40L)
+    val top = Pipe(df).topPerGroup(100, Seq(col("grp")), Seq(col("id").asc)).df
+    assertOperator(top)
+    assert(top.count() == 40L)
   }
 
   test("GLOBAL top-k differential: no grouping, random multi-column order") {
@@ -55,8 +65,9 @@ class TopKDifferentialSpec extends SparkSpec {
       val df = rows.toDF("id", "p", "q").repartition(5)
       val order = Seq(col("p").asc, col("q").desc, col("id").asc)
       val k = 7
-      val got = TopK.topKPerGroup(df, Seq.empty, order, k)
-        .select("id").as[Long].collect().toSet
+      val top = Pipe(df).topPerGroup(k, Seq.empty, order).df
+      assertOperator(top)
+      val got = top.select("id").as[Long].collect().toSet
       val model = rows.sortBy { case (id, p, q) => (p, -q, id) }
         .take(k).map(_._1).toSet
       assert(got == model, s"seed=$seed")
